@@ -2,12 +2,10 @@
 # Integration lane (build with: docker build --target integration .)
 # Placed FIRST so the plain `docker build .` default stays the runtime
 # image below.
-# Provisions the OPTIONAL JVM/Python dependencies this sandbox cannot
-# fetch (no network): spark-avro, iceberg-spark-runtime, delta-spark.
-# Running the test suite in this stage flips every dependency-gated
-# lane to its positive path: io.avro_available() → the vectorized JVM
-# avro tier; tests/test_backend_contract_races.py delta/iceberg params
-# un-skip; tests/test_backends.py delta merge tests run.
+# Provisions the OPTIONAL JVM dependency this sandbox cannot fetch (no
+# network): spark-avro. Running the test suite in this stage flips the
+# dependency-gated Avro lane to its positive path: io.avro_available()
+# → the vectorized JVM avro tier.
 FROM python:3.11-slim AS integration
 
 RUN apt-get update \
@@ -19,29 +17,17 @@ WORKDIR /app
 COPY pyproject.toml setup.py README.md ./
 COPY dish_data_pipeline_spark ./dish_data_pipeline_spark
 COPY tests ./tests
-RUN pip install --no-cache-dir .[rest] pytest delta-spark
+RUN pip install --no-cache-dir .[rest] pytest
 
-# Resolve the JVM packages once at build time into the local ivy
+# Resolve the JVM package once at build time into the local ivy
 # cache so test sessions start offline afterwards.
-ENV SPARK_VERSION=4.1.2 ICEBERG_VERSION=1.10.0
+ENV SPARK_VERSION=4.1.2
 RUN python - <<'PY'
 from pyspark.sql import SparkSession
 import os
-pkgs = ",".join([
-    f"org.apache.spark:spark-avro_2.13:{os.environ['SPARK_VERSION']}",
-    "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:"
-    + os.environ["ICEBERG_VERSION"],
-    "io.delta:delta-spark_2.13:4.0.0",
-])
+pkg = f"org.apache.spark:spark-avro_2.13:{os.environ['SPARK_VERSION']}"
 spark = (SparkSession.builder.master("local[2]")
-         .config("spark.jars.packages", pkgs)
-         .config("spark.sql.extensions",
-                 "org.apache.iceberg.spark.extensions"
-                 ".IcebergSparkSessionExtensions")
-         .config("spark.sql.catalog.local",
-                 "org.apache.iceberg.spark.SparkCatalog")
-         .config("spark.sql.catalog.local.type", "hadoop")
-         .config("spark.sql.catalog.local.warehouse", "/tmp/iceberg-wh")
+         .config("spark.jars.packages", pkg)
          .getOrCreate())
 spark.range(1).count()
 spark.stop()

@@ -31,6 +31,8 @@ import sys
 
 
 def _build_parser() -> argparse.ArgumentParser:
+    from dish_data_pipeline_spark.io_backends import BACKENDS
+
     p = argparse.ArgumentParser(
         prog="python -m dish_data_pipeline_spark",
         description="PySpark-native analytics engine CLI",
@@ -71,7 +73,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     mg.add_argument(
         "--backend",
-        choices=["parquet", "manifest"],
+        choices=sorted(BACKENDS),
         default="manifest",
         help="table format of the mapped paths",
     )
@@ -106,7 +108,7 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     sq.add_argument(
         "--backend",
-        choices=["parquet", "manifest"],
+        choices=sorted(BACKENDS),
         default="manifest",
         help="table format of the mapped paths",
     )

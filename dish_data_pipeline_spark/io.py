@@ -132,8 +132,8 @@ TABLE_FORMATS = ("parquet", "orc", "json", "csv", "avro")
 
 
 class FormatUnavailable(RuntimeError):
-    """The requested format needs an external package this session
-    doesn't ship (mirror of the DeltaBackend import gate)."""
+    """The requested format needs an external JVM package this
+    session doesn't ship."""
 
 
 def avro_available(spark: SparkSession) -> bool:
@@ -257,8 +257,8 @@ class ConcurrentWriteError(RuntimeError):
     writer is about to replace (lost update). The advisory lock turns
     that silent corruption into this loud, retryable error — the
     single-writer scope of ``atomic_overwrite`` is ENFORCED, not just
-    documented. For genuine multi-writer MERGE use the
-    transaction-logged ``DeltaBackend`` (io_backends)."""
+    documented. For genuine multi-writer MERGE use the versioned
+    manifest table, ``io_backends.ManifestParquetBackend``."""
 
 
 def _pid_alive(pid: int) -> bool:
@@ -278,7 +278,7 @@ def _swap_lock(base: str):
     is gone — a crashed writer — is stolen; a live owner raises
     ``ConcurrentWriteError``. Pid liveness is a same-host judgement,
     which matches the rename-pair swap itself (atomic only on one
-    filesystem); a shared lakehouse needs the Delta tier anyway."""
+    filesystem); several writers need ``ManifestParquetBackend``."""
     lock = base + ".lock"
     parent = os.path.dirname(base)
     if parent:
@@ -323,10 +323,11 @@ def atomic_overwrite(df: DataFrame, path: str) -> None:
     Crash-safety: every intermediate state is healable by
     ``recover_interrupted_swap`` (the completed-write marker is
     Spark's ``_SUCCESS``); a crashed writer's stale lock is stolen by
-    the next writer. For true multi-writer atomicity use a table
-    format with a transaction log (Delta/Iceberg ``MERGE INTO``) —
-    the operator composition in operators/upsert.py is
-    format-agnostic, so only this writer changes.
+    the next writer. For true multi-writer atomicity use the
+    versioned manifest table (``io_backends.ManifestParquetBackend``,
+    optimistic commits) — the operator composition in
+    operators/upsert.py is format-agnostic, so only this writer
+    changes.
     """
     base = path.rstrip("/")
     with _swap_lock(base):

@@ -4,9 +4,9 @@ The reference's MERGE runs inside BigQuery and is atomic under
 concurrent writers (reference pipeline/data_pipeline.py:155-216).
 This engine's default target zone is plain Parquet, where the
 equivalent is a read→join→write cycle finished by a directory swap
-(io.atomic_overwrite) — crash-safe but single-writer. A lakehouse
-deployment wants a transaction-logged table format instead, where
-``MERGE INTO`` is truly atomic and multi-writer.
+(io.atomic_overwrite) — crash-safe but single-writer. Where MERGE
+must be atomic under several writers, the target is a versioned
+manifest table instead.
 
 This module makes that a *backend choice* rather than a rewrite:
 the upsert composition (operators/upsert.py) is format-agnostic, so
@@ -28,22 +28,7 @@ merged into.
   reference's BigQuery-MERGE atomicity (reference
   pipeline/data_pipeline.py:155-216) executable on any POSIX
   filesystem. Scope: atomic create-if-absent needs ``os.link``
-  semantics (POSIX / HDFS-style), not S3; object-store deployments
-  use the DeltaBackend tier below.
-- ``DeltaBackend``: native ``DeltaTable.merge`` — optimistic
-  concurrency via the transaction log, multi-writer safe, and at
-  100 TB the data-skipping/file-pruning MERGE path rewrites only the
-  files whose key ranges intersect staging. Import-gated: the
-  ``delta-spark`` package is an *optional* dependency (not baked
-  into this container), so constructing the backend without it
-  raises ``BackendUnavailable`` with an actionable message. The
-  merge-condition SQL builder is a plain function, unit-tested
-  without the dependency.
-
-An Iceberg backend would follow the same protocol (``MERGE INTO``
-via spark.sql against a catalog table); it needs a catalog
-configured on the session, which file paths alone can't express, so
-it is left to deployments that have one.
+  semantics (POSIX / HDFS-style), not S3.
 """
 
 from __future__ import annotations
@@ -61,10 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from dish_data_pipeline_spark import io as dio
 from dish_data_pipeline_spark.operators.dedup import keep_latest
 from dish_data_pipeline_spark.operators.upsert import upsert
-
-
-class BackendUnavailable(RuntimeError):
-    """The backend's optional dependency is not installed."""
 
 
 class TableBackend(Protocol):
@@ -232,10 +213,10 @@ class ManifestParquetBackend:
     after ``max_retries`` losses.
 
     Scale shape: every MERGE rewrites the full table (same as
-    ParquetSwapBackend) — at lakehouse scale use DeltaBackend, whose
-    MERGE rewrites only key-intersecting files. What this tier adds
-    over the directory swap is *multi-writer safety and snapshot
-    reads*, not rewrite avoidance.
+    ParquetSwapBackend); DELETE and UPDATE already rewrite only the
+    files :meth:`prune_files` keeps. What this tier adds over the
+    directory swap is *multi-writer safety and snapshot reads*, not
+    rewrite avoidance on MERGE.
     """
 
     name = "manifest"
@@ -606,12 +587,7 @@ class ManifestParquetBackend:
         window where a rival can win the version race."""
         from dish_data_pipeline_spark.cache_registry import tracked_persist
 
-        if txn is not None and self.txn_covered(path, txn):
-            # replay fast path: detected from the manifest BEFORE the
-            # dedup plan is built or persisted (the in-loop re-check
-            # below still guards the commit race)
-            return None
-        deduped = tracked_persist(keep_latest(staging, keys, ts_col, tiebreakers))
+        deduped = None
         for attempt in range(self.max_retries + 1):
             base = self.latest_version(path)
             if base is None:
@@ -620,8 +596,14 @@ class ManifestParquetBackend:
             txns = dict(man_base.get("txns", {}))
             if txn is not None:
                 if txns.get(txn[0], -1) >= txn[1]:
-                    return None  # replayed batch: already applied
+                    # replayed batch: already applied — on the first
+                    # attempt, before the dedup plan is persisted
+                    return None
                 txns[txn[0]] = txn[1]
+            if deduped is None:
+                deduped = tracked_persist(
+                    keep_latest(staging, keys, ts_col, tiebreakers)
+                )
             target = self.read(spark, path, base)
             stats_cols = man_base.get("stats_cols") or []
             files, schema, stats = self._write_data(
@@ -1661,203 +1643,22 @@ class ManifestParquetBackend:
         return deleted
 
 
-def merge_condition(keys: Sequence[str], left: str = "t", right: str = "s") -> str:
-    """SQL ON-condition for a MERGE on bare equality keys — matches
-    the join-based upsert's semantics (plain ``=``: null keys never
-    match, same as ``DataFrame.join`` on column names)."""
-    if not keys:
-        raise ValueError("merge requires at least one key column")
-    return " AND ".join(f"{left}.`{k}` = {right}.`{k}`" for k in keys)
-
-
-class DeltaBackend:
-    """Native Delta Lake MERGE: atomic + multi-writer via the
-    transaction log. Requires the optional ``delta-spark`` package
-    AND a session with the Delta SQL extension configured."""
-
-    name = "delta"
-
-    def __init__(self) -> None:
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as exc:
-            raise BackendUnavailable(
-                "DeltaBackend needs the optional 'delta-spark' package "
-                "(pip install delta-spark) and a SparkSession configured "
-                "with io.delta.sql.DeltaSparkSessionExtension; the "
-                "default ParquetSwapBackend has no extra dependencies."
-            ) from exc
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(spark, path)
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.format("delta").load(path)
-
-    def create(self, df: DataFrame, path: str) -> None:
-        df.write.format("delta").mode("overwrite").save(path)
-
-    def replace(self, df: DataFrame, path: str) -> None:
-        # Delta overwrite is transactional: a new version whose adds
-        # replace the prior snapshot; history still time-travels.
-        df.write.format("delta").mode("overwrite").save(path)
-
-    def merge_keep_latest(
-        self,
-        spark: SparkSession,
-        path: str,
-        staging: DataFrame,
-        keys: Sequence[str],
-        ts_col: str,
-        tiebreakers: Sequence[str] = (),
-    ) -> None:
-        from delta.tables import DeltaTable
-
-        deduped = keep_latest(staging, keys, ts_col, tiebreakers)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(deduped.alias("s"), merge_condition(keys))
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-
-class IcebergBackend:
-    """Native Apache Iceberg MERGE for Iceberg-standardized estates.
-
-    Unlike the path-addressed backends, Iceberg tables live in a
-    session CATALOG — ``path`` arguments are table identifiers
-    (``catalog.db.tbl``). Requires the iceberg-spark-runtime JVM
-    package AND a session configured with a SparkCatalog +
-    IcebergSparkSessionExtensions; the gate raises
-    :class:`BackendUnavailable` with the setup hint otherwise (the
-    default ManifestParquetBackend covers MERGE atomicity, time
-    travel, and data skipping with no extra dependencies)."""
-
-    name = "iceberg"
-
-    _SETUP_HINT = (
-        "IcebergBackend needs the iceberg-spark-runtime package "
-        "(--packages org.apache.iceberg:iceberg-spark-runtime-"
-        "4.0_2.13:<ver>) and a session configured with "
-        "spark.sql.catalog.<name>=org.apache.iceberg.spark."
-        "SparkCatalog plus IcebergSparkSessionExtensions"
-    )
-
-    @staticmethod
-    def _gate(spark: SparkSession) -> None:
-        # half 1: the runtime jar must be on the classpath
-        try:
-            spark._jvm.java.lang.Class.forName(
-                "org.apache.iceberg.spark.SparkCatalog"
-            )
-        except Exception as exc:
-            raise BackendUnavailable(IcebergBackend._SETUP_HINT) from exc
-        # half 2: some spark.sql.catalog.* entry must actually resolve
-        # to SparkCatalog — a jar-present-but-unconfigured session
-        # would otherwise pass the gate and die later in opaque
-        # catalog-resolution errors instead of this hint
-        entries = dict(spark.sparkContext.getConf().getAll())
-        try:
-            it = (
-                spark._jsparkSession.sessionState()
-                .conf()
-                .getAllConfs()
-                .iterator()
-            )
-            while it.hasNext():
-                kv = it.next()
-                entries[kv._1()] = kv._2()
-        except Exception:
-            # internal accessor moved: SparkConf launch entries
-            # (the common --conf path) still cover the check
-            pass
-        if not IcebergBackend._catalog_configured(entries):
-            raise BackendUnavailable(
-                "iceberg-spark-runtime is on the classpath but no "
-                "spark.sql.catalog.* entry resolves to SparkCatalog; "
-                + IcebergBackend._SETUP_HINT
-            )
-
-    @staticmethod
-    def _catalog_configured(entries: dict) -> bool:
-        """True when some top-level ``spark.sql.catalog.<name>`` entry
-        (exactly one name segment — ``...<name>.type`` etc. are
-        catalog OPTIONS, not implementations) points at Iceberg's
-        SparkCatalog."""
-        return any(
-            k.startswith("spark.sql.catalog.")
-            and k.count(".") == 3
-            and v == "org.apache.iceberg.spark.SparkCatalog"
-            for k, v in entries.items()
-        )
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        self._gate(spark)
-        return spark.catalog.tableExists(path)
-
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        self._gate(spark)
-        return spark.read.table(path)
-
-    def create(self, df: DataFrame, path: str) -> None:
-        self._gate(df.sparkSession)
-        df.writeTo(path).using("iceberg").createOrReplace()
-
-    def replace(self, df: DataFrame, path: str) -> None:
-        # Iceberg REPLACE TABLE AS SELECT commits one atomic
-        # snapshot; prior snapshots remain time-travelable.
-        self._gate(df.sparkSession)
-        df.writeTo(path).using("iceberg").replace()
-
-    def merge_keep_latest(
-        self,
-        spark: SparkSession,
-        path: str,
-        staging: DataFrame,
-        keys: Sequence[str],
-        ts_col: str,
-        tiebreakers: Sequence[str] = (),
-    ) -> None:
-        self._gate(spark)
-        deduped = keep_latest(staging, keys, ts_col, tiebreakers)
-        view = f"_merge_src_{uuid.uuid4().hex}"
-        deduped.createOrReplaceTempView(view)
-        try:
-            spark.sql(
-                f"MERGE INTO {path} t USING {view} s "
-                f"ON {merge_condition(keys)} "
-                "WHEN MATCHED THEN UPDATE SET * "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-        finally:
-            spark.catalog.dropTempView(view)
-
-
-_BACKENDS = {
+#: The backend registry ``get_backend`` resolves names from.
+BACKENDS = {
     "parquet": ParquetSwapBackend,
     "manifest": ManifestParquetBackend,
-    "delta": DeltaBackend,
-    "iceberg": IcebergBackend,
 }
 
 
 def get_backend(name: str) -> TableBackend:
-    """Resolve a backend by name ('parquet' default path, 'manifest',
-    'delta', 'iceberg').
+    """Resolve a backend by name: 'parquet' (the default directory
+    swap) or 'manifest' (the atomic multi-writer tier).
 
-    Raises ``ValueError`` for unknown names, ``BackendUnavailable``
-    when the named backend's optional dependency is missing (delta
-    gates at construction; iceberg is session-scoped, so it gates on
-    first use)."""
+    Raises ``ValueError`` for unknown names."""
     try:
-        cls = _BACKENDS[name]
+        cls = BACKENDS[name]
     except KeyError:
         raise ValueError(
-            f"unknown table backend {name!r}; available: {sorted(_BACKENDS)}"
+            f"unknown table backend {name!r}; available: {sorted(BACKENDS)}"
         ) from None
     return cls()

@@ -732,7 +732,7 @@ def execute_merge(
     """Parse (if needed) and execute a MERGE, returning the merged
     target as a DataFrame — the caller commits it through whatever
     backend holds the table (``io.atomic_overwrite``,
-    ``ManifestParquetBackend.replace``, a Delta/Iceberg writer).
+    ``ManifestParquetBackend.replace``).
 
     ``verify_unique_match=True`` adds the ANSI/BigQuery cardinality
     check — one extra aggregation job that raises if any target row

@@ -6,7 +6,7 @@ instead of overwriting attribute changes, close the old version
 Pure DataFrame composition (anti/semi joins + unions), same shapes
 as operators/upsert.py: the history table is never shuffled beyond
 one hash join per branch, snapshot side broadcasts when small. Pair
-with io.atomic_overwrite (or a Delta/Iceberg MERGE) to persist.
+with io.atomic_overwrite (or ManifestParquetBackend.replace) to persist.
 """
 
 from __future__ import annotations

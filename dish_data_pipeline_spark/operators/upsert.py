@@ -24,8 +24,9 @@ bare column equality — ``key_exprs`` still lets tests replicate the
 expression-key form.
 
 Atomicity: composition is format-agnostic; pair with
-io.atomic_overwrite for plain Parquet, or write via Delta/Iceberg
-``MERGE INTO`` where a transaction log is required (SURVEY.md §7.4.1).
+io.atomic_overwrite for plain Parquet, or commit through
+``io_backends.ManifestParquetBackend`` where MERGE must be atomic
+under concurrent writers (SURVEY.md §7.4.1).
 """
 
 from __future__ import annotations

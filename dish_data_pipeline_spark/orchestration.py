@@ -26,7 +26,10 @@ driver-side payload, exactly as in the reference's XCom usage.
 
 ``pipeline.run_feed`` remains the collapsed single-process driver;
 ``run_stages`` here produces the same outcomes via the task-granular
-path (asserted by tests/test_orchestration.py).
+path (asserted by tests/test_orchestration.py) because the stages
+call ``pipeline``'s own steps: the pre-dedup rule, the DQ routing,
+the target landing (through ``ParquetSwapBackend``, run_feed's
+default backend) and the audit write live there, once.
 """
 
 from __future__ import annotations
@@ -40,20 +43,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from dish_data_pipeline_spark import io as dio
-from dish_data_pipeline_spark.operators.audit import audit_row
-from dish_data_pipeline_spark.operators.dedup import dedup_keyed
-from dish_data_pipeline_spark.operators.enrich import add_load_metadata
-from dish_data_pipeline_spark.operators.flatten import normalize_records
-from dish_data_pipeline_spark.operators.quality import (
-    DEFAULT_POLICIES,
-    is_recoverable,
-    run_data_quality_checks,
-)
-from dish_data_pipeline_spark.operators.upsert import upsert_keep_latest
-from dish_data_pipeline_spark.pipeline import FeedConfig, PipelineResult
-from dish_data_pipeline_spark.sources.rest import (
-    fetch_paginated_data,
-    records_to_dataframe,
+from dish_data_pipeline_spark.io_backends import ParquetSwapBackend
+from dish_data_pipeline_spark.pipeline import (
+    FeedConfig,
+    PipelineResult,
+    build_feed_frame,
+    dq_gate,
+    extract_feed,
+    land_staged,
+    write_audit,
 )
 
 
@@ -75,25 +73,17 @@ class StageContext:
 
 def stage_extract(ctx: StageContext) -> bool:
     """Task 1: paginated fetch + raw-zone landing (DAG:66-78)."""
-    kwargs = {"http_get": ctx.http_get} if ctx.http_get else {}
-    records, source_files = fetch_paginated_data(
-        ctx.base_url,
-        ctx.feed.endpoint,
-        raw_zone_dir=ctx.path("raw"),
-        name=ctx.feed.name,
-        **kwargs,
+    ctx.xcom["records"], ctx.xcom["source_files"] = extract_feed(
+        ctx.feed, ctx.base_url, ctx.warehouse_dir, ctx.http_get
     )
-    ctx.xcom["records"] = records
-    ctx.xcom["source_files"] = source_files
     return True
 
 
 def stage_transform(ctx: StageContext) -> bool:
     """Task 2: flatten/sanitize/enrich + pre-dedup (DAG:80-87)."""
-    df = records_to_dataframe(ctx.spark, ctx.xcom["records"], ctx.feed.schema)
-    df = add_load_metadata(normalize_records(df), load_date=ctx.load_date)
-    pre_keys = [k for k in ctx.feed.keys if k in df.columns]
-    ctx.xcom["df"] = dedup_keyed(df, pre_keys or None)
+    ctx.xcom["df"] = build_feed_frame(
+        ctx.spark, ctx.feed, ctx.xcom["records"], ctx.load_date
+    )
     return True
 
 
@@ -101,21 +91,12 @@ def stage_dq_check(ctx: StageContext) -> bool:
     """Task 3 (SHORT-CIRCUIT): DQ gate. Fatal issues → audit FAILED
     and return False (downstream compute stages are skipped);
     recoverable duplicates → dedup and continue (DAG:89-101)."""
-    feed = ctx.feed
-    policies = {
-        **DEFAULT_POLICIES,
-        feed.name: {"required": feed.required, "keys": feed.keys},
-    }
-    passed, issues = run_data_quality_checks(ctx.xcom["df"], feed.name, policies)
-    ctx.xcom["issues"] = issues
-    if passed:
-        return True
-    fatal = [i for i in issues if not is_recoverable(i)]
-    if fatal:
-        ctx.xcom["status"] = f"FAILED: {', '.join(issues)}"
+    df, ctx.xcom["issues"] = dq_gate(ctx.xcom["df"], ctx.feed)
+    if df is None:
+        ctx.xcom["status"] = f"FAILED: {', '.join(ctx.xcom['issues'])}"
         _write_audit(ctx, 0, ctx.xcom["status"])
         return False
-    ctx.xcom["df"] = dedup_keyed(ctx.xcom["df"], feed.keys)
+    ctx.xcom["df"] = df
     return True
 
 
@@ -132,15 +113,10 @@ def stage_load_staging(ctx: StageContext) -> bool:
 
 def stage_upsert_final(ctx: StageContext) -> bool:
     """Task 5: MERGE keep-latest into the target (DAG:111-116)."""
-    target = ctx.path(f"tgt_{ctx.feed.name}")
-    staged = ctx.xcom["staged"]
-    if os.path.exists(target):
-        merged = upsert_keep_latest(
-            ctx.spark.read.parquet(target), staged, ctx.feed.keys, "load_timestamp"
-        )
-        dio.atomic_overwrite(merged, target)
-    else:
-        dio.write_staging(staged, target)
+    land_staged(
+        ctx.spark, ParquetSwapBackend(), ctx.feed, ctx.warehouse_dir,
+        ctx.xcom["staged"],
+    )
     ctx.xcom["status"] = "SUCCESS"
     return True
 
@@ -156,16 +132,8 @@ def stage_audit_log(ctx: StageContext) -> bool:
 
 
 def _write_audit(ctx: StageContext, count: int, status: str) -> None:
-    dio.write_append(
-        audit_row(
-            ctx.spark,
-            ctx.feed.name,
-            count,
-            status,
-            ctx.xcom.get("source_files", []),
-        ),
-        ctx.path("load_audit"),
-    )
+    source_files = ctx.xcom.get("source_files", [])
+    write_audit(ctx.spark, ctx.feed, ctx.warehouse_dir, count, status, source_files)
 
 
 #: The reference DAG topology, in order.

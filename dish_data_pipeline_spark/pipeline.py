@@ -7,6 +7,9 @@ keep-latest upsert into target → audit SUCCESS. Audit fires on the
 failure path too (try/except, like the reference — but without its
 unbound ``source_files`` bug, defect ledger item 2).
 
+``run_feed`` and the stage-granular ``orchestration`` call the same
+step functions below, so the two drivers cannot drift apart.
+
 The six Airflow tasks of the reference DAG collapse into this one
 driver program; XCom disappears because dataflow stays inside the
 lazy plan (SURVEY.md §3.2).
@@ -56,6 +59,95 @@ class PipelineResult:
     issues: list[str] = field(default_factory=list)
 
 
+def extract_feed(
+    feed: FeedConfig, base_url: str, warehouse_dir: str, http_get=None
+) -> tuple[list[dict], list[str]]:
+    """Paginated fetch with raw-zone landing under
+    ``<warehouse>/raw/``; returns (records, source files)."""
+    kwargs = {"http_get": http_get} if http_get else {}
+    return fetch_paginated_data(
+        base_url,
+        feed.endpoint,
+        raw_zone_dir=os.path.join(warehouse_dir, "raw"),
+        name=feed.name,
+        **kwargs,
+    )
+
+
+def build_feed_frame(
+    spark: SparkSession,
+    feed: FeedConfig,
+    records: list[dict],
+    load_date: dt.date | None = None,
+) -> DataFrame:
+    """Records → flattened, sanitized, load-stamped, pre-deduped frame."""
+    df = records_to_dataframe(spark, records, feed.schema)
+    df = add_load_metadata(normalize_records(df), load_date=load_date)
+    # Reference pre-dedup (D1, pipeline/data_pipeline.py:84-85):
+    # KEYED only when ``visit_date`` is present (the daily_visits
+    # shape); FULL-ROW for every other feed — so key-duplicates
+    # that are not exact-row duplicates survive to the DQ gate
+    # and exercise the recoverable-duplicate routing in
+    # ``dq_gate`` (D2, reference :253-258). Generalizing this to
+    # "keyed whenever the key columns exist" (the pre-round-10
+    # behavior) made the recovery branch dead code for all feeds.
+    if "visit_date" in df.columns:
+        pre_keys = [k for k in feed.keys if k in df.columns]
+        return dedup_keyed(df, pre_keys or None)
+    return dedup_keyed(df, None)
+
+
+def dq_gate(df: DataFrame, feed: FeedConfig) -> tuple[DataFrame | None, list[str]]:
+    """The DQ gate → (frame to stage, issues). The frame is None when
+    an issue is fatal; recoverable duplicates are deduped by the feed
+    keys and the run continues (reference
+    pipeline/data_pipeline.py:253-258)."""
+    # Feed-specific config wins over the built-in defaults — a feed
+    # named like a default (daily_visits/ga_sessions) must be gated
+    # on ITS OWN required/keys, matching the dedup path.
+    policies = {
+        **DEFAULT_POLICIES,
+        feed.name: {"required": feed.required, "keys": feed.keys},
+    }
+    passed, issues = run_data_quality_checks(df, feed.name, policies)
+    if passed:
+        return df, issues
+    if any(not is_recoverable(i) for i in issues):
+        return None, issues
+    return dedup_keyed(df, feed.keys), issues
+
+
+def land_staged(
+    spark: SparkSession,
+    backend: TableBackend,
+    feed: FeedConfig,
+    warehouse_dir: str,
+    staged: DataFrame,
+) -> None:
+    """Keep-latest MERGE of the staged rows into
+    ``<warehouse>/tgt_<name>/``, or create it on the first load."""
+    target = os.path.join(warehouse_dir, f"tgt_{feed.name}")
+    if backend.exists(spark, target):
+        backend.merge_keep_latest(spark, target, staged, feed.keys, "load_timestamp")
+    else:
+        backend.create(staged, target)
+
+
+def write_audit(
+    spark: SparkSession,
+    feed: FeedConfig,
+    warehouse_dir: str,
+    count: int,
+    status: str,
+    source_files: list[str],
+) -> None:
+    """Append one row to ``<warehouse>/load_audit/``."""
+    dio.write_append(
+        audit_row(spark, feed.name, count, status, source_files),
+        os.path.join(warehouse_dir, "load_audit"),
+    )
+
+
 def run_feed(
     spark: SparkSession,
     feed: FeedConfig,
@@ -71,45 +163,14 @@ def run_feed(
 
     ``backend`` picks the target-table format (io_backends): the
     default join-based Parquet MERGE, or any TableBackend (e.g.
-    'delta' for transaction-logged atomic MERGE INTO)."""
+    'manifest', the ``ManifestParquetBackend`` tier whose MERGE is
+    atomic under concurrent writers)."""
     if isinstance(backend, str):
         backend = get_backend(backend)
-    raw_dir = os.path.join(warehouse_dir, "raw")
     staging_path = os.path.join(warehouse_dir, f"staging_{feed.name}")
-    target_path = os.path.join(warehouse_dir, f"tgt_{feed.name}")
-    audit_path = os.path.join(warehouse_dir, "load_audit")
     source_files: list[str] = []
-
-    def _audit(count: int, status: str) -> None:
-        dio.write_append(
-            audit_row(spark, feed.name, count, status, source_files), audit_path
-        )
-
     try:
-        kwargs = {"http_get": http_get} if http_get else {}
-        records, source_files = fetch_paginated_data(
-            base_url,
-            feed.endpoint,
-            raw_zone_dir=raw_dir,
-            name=feed.name,
-            **kwargs,
-        )
-        df = records_to_dataframe(spark, records, feed.schema)
-        df = add_load_metadata(normalize_records(df), load_date=load_date)
-        # Reference pre-dedup (D1, pipeline/data_pipeline.py:84-85):
-        # KEYED only when ``visit_date`` is present (the daily_visits
-        # shape); FULL-ROW for every other feed — so key-duplicates
-        # that are not exact-row duplicates survive to the DQ gate
-        # and exercise the recoverable-duplicate routing below (D2,
-        # reference :253-258). Generalizing this to "keyed whenever
-        # the key columns exist" (the pre-round-10 behavior) made the
-        # recovery branch dead code for all feeds.
-        if "visit_date" in df.columns:
-            pre_keys = [k for k in feed.keys if k in df.columns]
-            df = dedup_keyed(df, pre_keys or None)
-        else:
-            df = dedup_keyed(df, None)
-
+        records, source_files = extract_feed(feed, base_url, warehouse_dir, http_get)
         # Compute the feed relation ONCE: the DQ gate's aggregate,
         # the staging write and the audited count all consume the
         # same extract→normalize→dedup plan, which previously
@@ -117,28 +178,13 @@ def run_feed(
         # fetched records plus the dedup window shuffle, 2-3×).
         # The cache is feed-sized (the reference ingests ~3k
         # rows/run) and released in the finally below.
-        cached = df = df.persist()
-
-        # Feed-specific config wins over the built-in defaults — a
-        # feed named like a default (daily_visits/ga_sessions) must
-        # be gated on ITS OWN required/keys, matching the dedup path.
-        policies = {
-            **DEFAULT_POLICIES,
-            feed.name: {"required": feed.required, "keys": feed.keys},
-        }
+        cached = build_feed_frame(spark, feed, records, load_date).persist()
         try:
-            passed, issues = run_data_quality_checks(df, feed.name, policies)
-            if not passed:
-                fatal = [i for i in issues if not is_recoverable(i)]
-                if fatal:
-                    _audit(0, f"FAILED: {', '.join(issues)}")
-                    return PipelineResult(feed.name, "FAILED", 0, issues)
-                # Recoverable duplicates: dedup by key and continue
-                # (reference pipeline/data_pipeline.py:253-258) — a
-                # plan over the cached base, so the recovery pass
-                # re-windows cached rows, not the source fetch.
-                df = dedup_keyed(df, feed.keys)
-
+            df, issues = dq_gate(cached, feed)
+            if df is None:
+                status = f"FAILED: {', '.join(issues)}"
+                write_audit(spark, feed, warehouse_dir, 0, status, source_files)
+                return PipelineResult(feed.name, "FAILED", 0, issues)
             dio.write_staging(df, staging_path)
             # Audited count = the staged row count; counting the
             # (cached) relation just written avoids re-listing and
@@ -147,16 +193,9 @@ def run_feed(
         finally:
             cached.unpersist()
         staged = spark.read.parquet(staging_path)
-
-        if backend.exists(spark, target_path):
-            backend.merge_keep_latest(
-                spark, target_path, staged, feed.keys, "load_timestamp"
-            )
-        else:
-            backend.create(staged, target_path)
-
-        _audit(count, "SUCCESS")
+        land_staged(spark, backend, feed, warehouse_dir, staged)
+        write_audit(spark, feed, warehouse_dir, count, "SUCCESS", source_files)
         return PipelineResult(feed.name, "SUCCESS", count, issues)
     except Exception as exc:  # audit-on-failure, reference :266-271
-        _audit(0, f"FAILED: {exc}")
+        write_audit(spark, feed, warehouse_dir, 0, f"FAILED: {exc}", source_files)
         return PipelineResult(feed.name, "FAILED", 0, [str(exc)])

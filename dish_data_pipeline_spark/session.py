@@ -55,7 +55,8 @@ _DEFAULT_CONF: dict[str, str] = {
 def _parse_env_conf(env_conf: str | None) -> dict[str, str]:
     """Parse ``DISH_SPARK_CONF`` ("k=v;k2=v2") into a conf dict.
     A malformed entry raises here, naming the env var, rather than
-    surfacing as a cryptic Spark launch failure."""
+    surfacing as a cryptic Spark launch failure. A value cannot
+    contain ``;``: it always separates entries (there is no escape)."""
     out: dict[str, str] = {}
     if not env_conf:
         return out
@@ -84,7 +85,8 @@ def get_spark(
     ``$SPARK_GRAFT_CPUS`` (or all cores). ``shuffle_partitions``
     defaults to the local core count — on a real cluster pass a
     larger value (or rely on AQE coalescing from a high initial
-    count).
+    count). ``$DISH_SPARK_CONF`` entries override the same keys in
+    ``extra_conf``, and their values cannot contain ``;``.
     """
     builder = SparkSession.builder.appName(app_name)
     cpus = os.environ.get("SPARK_GRAFT_CPUS")

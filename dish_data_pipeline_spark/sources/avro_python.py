@@ -406,12 +406,15 @@ def _decode(node: Any, buf: bytes, pos: int) -> tuple[Any, int]:
 
 def compile_encoder(node: Any):
     """Schema node → ``enc(v, out)`` closure writing the identical
-    bytes ``_encode(node, v, out)`` would."""
+    bytes ``_encode(node, v, out)`` would. A union with more than one
+    non-null branch raises ``ValueError``: every non-null value goes
+    through one branch, so the others would be mis-encoded."""
     if isinstance(node, list):  # union: zigzag branch index, then value
         null_idx = node.index("null") if "null" in node else None
-        branch = next(
-            (i for i, n in enumerate(node) if n != "null"), None
-        )
+        branches = [i for i, n in enumerate(node) if n != "null"]
+        if len(branches) > 1:
+            raise ValueError(f"avro union {node}: more than one non-null branch")
+        branch = branches[0] if branches else None
         inner = compile_encoder(node[branch]) if branch is not None else None
 
         def enc_union(v: Any, out: bytearray) -> None:

@@ -23,9 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from dish_data_pipeline_spark import io as dio
+from dish_data_pipeline_spark.io_backends import (
+    ManifestParquetBackend,
+    ParquetSwapBackend,
+)
 from dish_data_pipeline_spark.operators.dedup import keep_latest
-from dish_data_pipeline_spark.operators.upsert import upsert_keep_latest
 
 
 def stream_raw_zone(
@@ -173,22 +175,23 @@ def stream_upsert_to_target(
     tiebreakers: Sequence[str] = (),
 ):
     """foreachBatch MERGE: each micro-batch keep-latest-dedups and
-    upserts into the Parquet target — identical semantics to the
-    batch J2 path (reference pipeline/data_pipeline.py:177-206), so
-    replays converge (idempotent by key).
+    upserts into the Parquet target through ``ParquetSwapBackend`` —
+    identical semantics to the batch J2 path (reference
+    pipeline/data_pipeline.py:177-206), so replays converge
+    (idempotent by key).
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
+    be = ParquetSwapBackend()
 
     def do_upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        if os.path.exists(target_path):
-            target = spark.read.parquet(target_path)
-            merged = upsert_keep_latest(target, batch, keys, ts_col, tiebreakers)
-            dio.atomic_overwrite(merged, target_path)
+        if be.exists(spark, target_path):
+            be.merge_keep_latest(
+                spark, target_path, batch, keys, ts_col, tiebreakers
+            )
         else:
-            deduped = keep_latest(batch, keys, ts_col, tiebreakers)
-            deduped.write.parquet(target_path)
+            be.create(keep_latest(batch, keys, ts_col, tiebreakers), target_path)
 
     return (
         stream_df.writeStream.foreachBatch(do_upsert)
@@ -216,8 +219,6 @@ def stream_append_to_table(
     (``create()`` it with the stream's schema first).
 
     Returns the started StreamingQuery (caller awaits/stops)."""
-    from dish_data_pipeline_spark.io_backends import ManifestParquetBackend
-
     be = ManifestParquetBackend()
 
     def do_append(batch: DataFrame, batch_id: int) -> None:
@@ -250,8 +251,6 @@ def stream_upsert_to_table(
     version history. The table must exist (``create()`` first).
 
     Returns the started StreamingQuery (caller awaits/stops)."""
-    from dish_data_pipeline_spark.io_backends import ManifestParquetBackend
-
     be = ManifestParquetBackend()
 
     def do_upsert(batch: DataFrame, batch_id: int) -> None:
@@ -301,7 +300,6 @@ def stream_merge_sql_to_table(
     ``extra_tables`` supplies additional static catalog names the
     statement may reference. The table must exist (``create()``
     first). Returns the started StreamingQuery (caller awaits)."""
-    from dish_data_pipeline_spark.io_backends import ManifestParquetBackend
     from dish_data_pipeline_spark.merge_sql import (
         MergeParseError,
         merge_into_backend,

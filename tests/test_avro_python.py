@@ -756,3 +756,25 @@ def test_compiled_codec_matches_interpreter():
         want, want_pos = _decode(node, bytes(ref), 0)
         have, have_pos = dec(bytes(ref), 0)
         assert (have, have_pos) == (want, want_pos)
+
+
+def test_compile_encoder_rejects_multi_branch_union():
+    """Every non-null value goes through ONE union branch, so a union
+    with two non-null branches would mis-encode values of the second
+    (a string written as a long's zigzag); it is refused when the
+    codec is compiled, also when nested in a record field."""
+    from dish_data_pipeline_spark.sources.avro_python import compile_encoder
+
+    with pytest.raises(ValueError, match="more than one non-null branch"):
+        compile_encoder(["null", "long", "string"])
+    record = {
+        "type": "record",
+        "name": "r",
+        "fields": [{"name": "x", "type": ["long", "string"]}],
+    }
+    with pytest.raises(ValueError, match="more than one non-null branch"):
+        compile_encoder(record)
+    # the nullable single-branch shape still compiles
+    out = bytearray()
+    compile_encoder(["null", "long"])(5, out)
+    assert bytes(out) == b"\x02\x0a"

@@ -1,11 +1,11 @@
-"""Multi-writer MERGE races, parameterized over every backend that
-claims the concurrent-MERGE contract (VERDICT r10 item 5).
+"""Multi-writer MERGE races, stated in backend-AGNOSTIC form for
+every backend that claims the concurrent-MERGE contract (today the
+manifest table).
 
 The manifest backend's race proofs (tests/test_backends.py) assert
 manifest-specific observables (committed version numbers). This
-module states the same guarantees in backend-AGNOSTIC form so a
-lane with delta-spark or iceberg-spark-runtime present inherits
-them unchanged:
+module states the same guarantees as observables any multi-writer
+backend must show:
 
 - every racing MERGE eventually lands (no writer starves, no
   exception escapes),
@@ -14,11 +14,6 @@ them unchanged:
   order of the racing writers that explains every key's final
   owner (each key is owned by the last writer, in that order,
   that touched it).
-
-On this sandbox delta/iceberg skip with their gate hints; the
-manifest lane runs green. The skip reason IS the test's value on a
-bare sandbox: the same assertions execute against the other
-backends the moment their dependency appears.
 """
 
 from __future__ import annotations
@@ -29,35 +24,15 @@ from itertools import permutations
 import pytest
 from pyspark.sql import functions as F
 
-from dish_data_pipeline_spark.io_backends import (
-    BackendUnavailable,
-    ManifestParquetBackend,
-    get_backend,
-)
+from dish_data_pipeline_spark.io_backends import ManifestParquetBackend
 
-MERGE_CONTRACT_BACKENDS = ("manifest", "delta", "iceberg")
+MERGE_CONTRACT_BACKENDS = ("manifest",)
 
 
 @pytest.fixture(params=MERGE_CONTRACT_BACKENDS)
-def race_env(request, spark, tmp_path):
-    """→ (backend, table-locator factory). Skips when the backend's
-    optional dependency is absent (the gate message is surfaced as
-    the skip reason)."""
-    name = request.param
-    if name == "manifest":
-        return ManifestParquetBackend(max_retries=20), (
-            lambda s: str(tmp_path / s)
-        )
-    try:
-        be = get_backend(name)
-        if name == "iceberg":
-            be._gate(spark)  # session-scoped gate (jar + catalog conf)
-    except BackendUnavailable as exc:
-        pytest.skip(f"{name}: {exc}")
-    if name == "iceberg":
-        # iceberg tables live in a catalog, not at a path
-        return be, (lambda s: f"spark_catalog.default.{s}")
-    return be, (lambda s: str(tmp_path / s))
+def race_env(tmp_path):
+    """→ (backend, table-locator factory)."""
+    return ManifestParquetBackend(max_retries=20), (lambda s: str(tmp_path / s))
 
 
 def _serializable_witness(

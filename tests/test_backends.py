@@ -1,9 +1,9 @@
 """Pluggable table-format backends (io_backends): the parquet swap
-path end-to-end, backend routing through run_feed, the MERGE
-condition builder, and the delta import gate (reference parity:
-the reference's MERGE is atomic inside BigQuery,
-pipeline/data_pipeline.py:155-216 — DeltaBackend is the engine's
-transaction-logged equivalent)."""
+path end-to-end, backend routing through run_feed, and the
+manifest tier (reference parity: the reference's MERGE is atomic
+inside BigQuery, pipeline/data_pipeline.py:155-216 —
+ManifestParquetBackend is the engine's transaction-logged
+equivalent)."""
 
 from __future__ import annotations
 
@@ -11,24 +11,13 @@ import pytest
 from pyspark.sql import Row
 
 from dish_data_pipeline_spark.io_backends import (
-    BackendUnavailable,
-    DeltaBackend,
+    ManifestParquetBackend,
     ParquetSwapBackend,
     get_backend,
-    merge_condition,
 )
 from dish_data_pipeline_spark.operators.upsert import upsert_keep_latest
 from dish_data_pipeline_spark.pipeline import FeedConfig, run_feed
 from tests.test_pipeline import FEED, visits_server
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def test_parquet_backend_matches_upsert_keep_latest(spark, tmp_path):
@@ -98,38 +87,13 @@ def test_run_feed_routes_through_backend(spark, tmp_path):
 
 def test_get_backend_names():
     assert isinstance(get_backend("parquet"), ParquetSwapBackend)
-    with pytest.raises(ValueError, match="unknown table backend"):
-        get_backend("bigquery")
-
-
-def test_merge_condition_sql():
-    assert merge_condition(["k"]) == "t.`k` = s.`k`"
-    assert (
-        merge_condition(["a", "b"], "tgt", "stg")
-        == "tgt.`a` = stg.`a` AND tgt.`b` = stg.`b`"
-    )
-    with pytest.raises(ValueError):
-        merge_condition([])
-
-
-@pytest.mark.skipif(_delta_available(), reason="delta-spark installed")
-def test_delta_backend_gated_when_dependency_missing():
-    with pytest.raises(BackendUnavailable, match="delta-spark"):
-        DeltaBackend()
-    with pytest.raises(BackendUnavailable):
-        get_backend("delta")
-
-
-@pytest.mark.skipif(not _delta_available(), reason="delta-spark not installed")
-def test_delta_backend_merge(spark, tmp_path):
-    path = str(tmp_path / "delta_tgt")
-    be = DeltaBackend()
-    tgt = spark.createDataFrame([Row(k="a", v=1, ts=1)])
-    stg = spark.createDataFrame([Row(k="a", v=10, ts=2), Row(k="b", v=2, ts=2)])
-    be.create(tgt, path)
-    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
-    got = sorted(map(tuple, be.read(spark, path).select("k", "v").collect()))
-    assert got == [("a", 10), ("b", 2)]
+    assert isinstance(get_backend("manifest"), ManifestParquetBackend)
+    for gone in ("bigquery", "delta", "iceberg"):
+        with pytest.raises(
+            ValueError,
+            match=r"unknown table backend .*\['manifest', 'parquet'\]",
+        ):
+            get_backend(gone)
 
 
 # --- single-writer enforcement + crash recovery (round 5) ---------
@@ -884,9 +848,10 @@ def test_stream_append_exactly_once_across_replay(spark, tmp_path):
 
 
 # --- merge txn markers + age-gated vacuum ----------------------------
-def test_merge_txn_replay_is_noop(spark, tmp_path):
+def test_merge_txn_replay_is_noop(spark, tmp_path, monkeypatch):
     from pyspark.sql import Row
 
+    from dish_data_pipeline_spark import cache_registry
     from dish_data_pipeline_spark.io_backends import ManifestParquetBackend
 
     path = str(tmp_path / "mtxn")
@@ -896,10 +861,20 @@ def test_merge_txn_replay_is_noop(spark, tmp_path):
     assert be.merge_keep_latest(
         spark, path, stg, ["k"], "ts", txn=("up", 0)
     ) == 1
-    # replay: no recompute, no version
+    # replay: no recompute, no version — it returns before the
+    # keep-latest plan is persisted
+    persisted: list[object] = []
+    real_persist = cache_registry.tracked_persist
+
+    def counting_persist(df):
+        persisted.append(df)
+        return real_persist(df)
+
+    monkeypatch.setattr(cache_registry, "tracked_persist", counting_persist)
     assert be.merge_keep_latest(
         spark, path, stg, ["k"], "ts", txn=("up", 0)
     ) is None
+    assert persisted == []
     assert be.latest_version(path) == 1
     got = sorted(map(tuple, be.read(spark, path).select("k", "v").collect()))
     assert got == [("a", 10), ("b", 2)]
@@ -1295,78 +1270,6 @@ def test_concurrent_compact_and_appends_never_lose_rows(spark, tmp_path):
     # it won its race
     wins = sum(1 for v in compact_results if v != -1)
     assert be.latest_version(path) == 9 + wins
-
-
-def _iceberg_available(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
-def test_iceberg_backend_gated_when_dependency_missing(spark):
-    """IcebergBackend resolves by name but every session-touching
-    method raises the setup hint when the iceberg-spark-runtime
-    package is absent (gate is session-scoped, unlike delta's
-    import-time gate, because iceberg needs no Python package)."""
-    from pyspark.sql import functions as F
-
-    from dish_data_pipeline_spark.io_backends import (
-        BackendUnavailable,
-        IcebergBackend,
-        get_backend,
-    )
-
-    be = get_backend("iceberg")
-    assert isinstance(be, IcebergBackend)
-    if _iceberg_available(spark):
-        import pytest as _pytest
-
-        _pytest.skip("iceberg-spark-runtime installed; gate not testable")
-    import pytest as _pytest
-
-    df = spark.range(1).select(F.col("id").alias("k"))
-    with _pytest.raises(BackendUnavailable, match="iceberg-spark-runtime"):
-        be.exists(spark, "cat.db.t")
-    with _pytest.raises(BackendUnavailable, match="iceberg-spark-runtime"):
-        be.read(spark, "cat.db.t")
-    with _pytest.raises(BackendUnavailable, match="iceberg-spark-runtime"):
-        be.create(df, "cat.db.t")
-    with _pytest.raises(BackendUnavailable, match="iceberg-spark-runtime"):
-        be.merge_keep_latest(spark, "cat.db.t", df, ["k"], "k")
-
-
-def test_iceberg_gate_catalog_predicate():
-    """The jar-present half of the gate: a session with the runtime
-    on the classpath but NO SparkCatalog configured must still be
-    refused with the setup hint (the other documented half of the
-    requirement) — checked via the extracted conf predicate."""
-    from dish_data_pipeline_spark.io_backends import IcebergBackend
-
-    ok = IcebergBackend._catalog_configured
-    assert ok(
-        {"spark.sql.catalog.lake": "org.apache.iceberg.spark.SparkCatalog"}
-    )
-    assert ok(
-        {
-            "spark.app.name": "x",
-            "spark.sql.catalog.spark_catalog":
-                "org.apache.iceberg.spark.SparkCatalog",
-            "spark.sql.catalog.spark_catalog.type": "hive",
-        }
-    )
-    # unconfigured, misconfigured, or option-only entries don't pass
-    assert not ok({})
-    assert not ok({"spark.app.name": "x"})
-    assert not ok(
-        {"spark.sql.catalog.lake": "com.example.SomeOtherCatalog"}
-    )
-    assert not ok(
-        {"spark.sql.catalog.lake.type": "hadoop"}  # option, no impl
-    )
 
 
 def test_stream_merge_sql_replay_three_batches(spark, tmp_path):

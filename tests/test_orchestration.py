@@ -38,6 +38,15 @@ def test_stages_match_run_feed_success(spark, tmp_path):
     audit = spark.read.parquet(f"{ctx.warehouse_dir}/load_audit").collect()
     assert len(audit) == 1 and audit[0].status == "SUCCESS"
 
+    # Re-run over the same warehouse: the upsert stage now takes its
+    # MERGE branch, and keep-latest converges to the same target.
+    res2 = run_stages(_ctx(spark, tmp_path, visits_server()))
+    assert res2.status == "SUCCESS" and res2.record_count == 8
+    tgt = spark.read.parquet(f"{ctx.warehouse_dir}/tgt_daily_visits")
+    assert tgt.count() == 8
+    audit = spark.read.parquet(f"{ctx.warehouse_dir}/load_audit").collect()
+    assert [r.status for r in audit] == ["SUCCESS", "SUCCESS"]
+
 
 def test_dq_short_circuit_skips_compute_but_audits(spark, tmp_path):
     def empty(url):

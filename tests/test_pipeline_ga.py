@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from dish_data_pipeline_spark.pipeline import FeedConfig, run_feed
 
 FEED = FeedConfig(
@@ -94,15 +96,34 @@ def dup_sessions_server(n=6):
     return http_get
 
 
-def test_recoverable_duplicates_dedup_and_continue(spark, tmp_path):
+def _run_stages(spark, feed, base_url, wh, http_get, load_date):
+    from dish_data_pipeline_spark.orchestration import StageContext, run_stages
+
+    return run_stages(
+        StageContext(spark, feed, base_url, wh, http_get, load_date)
+    )
+
+
+def _run_feed(spark, feed, base_url, wh, http_get, load_date):
+    return run_feed(
+        spark, feed, base_url, wh, http_get=http_get, load_date=load_date
+    )
+
+
+@pytest.mark.parametrize(
+    "driver", [_run_feed, _run_stages], ids=["run_feed", "run_stages"]
+)
+def test_recoverable_duplicates_dedup_and_continue(spark, tmp_path, driver):
     """D2/X9 (reference pipeline/data_pipeline.py:253-258): key-dups
     surviving pre-dedup trigger the recoverable branch — DQ reports
-    the duplicates, run_feed dedups by the feed keys and CONTINUES,
-    and the SUCCESS audit carries the deduped count."""
+    the duplicates, the feed is deduped by the feed keys and the run
+    CONTINUES, and the SUCCESS audit carries the deduped count. Both
+    drivers — run_feed and the stage-granular orchestration — take
+    this route."""
     wh = str(tmp_path / "wh")
-    res = run_feed(
-        spark, FEED, "http://fake", wh, http_get=dup_sessions_server(6),
-        load_date=dt.date(2024, 3, 1),
+    res = driver(
+        spark, FEED, "http://fake", wh, dup_sessions_server(6),
+        dt.date(2024, 3, 1),
     )
     assert res.status == "SUCCESS", res.issues
     # The route was D2, not D1: DQ saw and reported the duplicates.
