@@ -33,15 +33,18 @@ merged into.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
 import time
 import uuid
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from dish_data_pipeline_spark import io as dio
 from dish_data_pipeline_spark.operators.dedup import keep_latest
@@ -205,18 +208,32 @@ class ManifestParquetBackend:
     half-written manifest. Data files written by a loser are
     unreferenced garbage until :meth:`vacuum`.
 
-    MERGE concurrency: each attempt reads the latest snapshot,
-    recomputes the join-based upsert against it, writes fresh data
-    files, and tries to commit ``latest+1``; on losing the race it
-    rereads and recomputes (serializable — the Delta/Iceberg
-    optimistic-retry shape), giving up with :class:`CommitConflict`
-    after ``max_retries`` losses.
+    Commit protocol: every write after ``create``'s version 0 runs
+    one loop. Each attempt reads the latest manifest, returns at once
+    when it already covers the write's ``txn`` marker (a replayed
+    batch writes nothing), builds the op's new snapshot on that base,
+    and tries to commit ``latest+1``. The ops differ only in what
+    they do on losing that race:
+
+    - :meth:`merge_keep_latest` rereads and recomputes (serializable,
+      the Delta/Iceberg optimistic-retry shape) and raises
+      :class:`CommitConflict` after ``max_retries`` losses;
+    - :meth:`replace` and :meth:`append` re-link the same data files,
+      written once, against the new latest (their result does not
+      depend on the base), with the same ``max_retries`` bound;
+    - :meth:`compact`, :meth:`delete_where` and :meth:`update_where`
+      abort and return version ``-1``: their rewrite depends on the
+      base they read, so committing it anyway could drop or resurrect
+      a concurrent writer's rows;
+    - :meth:`restore`, :meth:`add_columns` and :meth:`drop_column`
+      raise :class:`CommitConflict` (re-examine state before retrying:
+      the rival may have been another restore or ALTER).
 
     Scale shape: every MERGE rewrites the full table (same as
-    ParquetSwapBackend); DELETE and UPDATE already rewrite only the
-    files :meth:`prune_files` keeps. What this tier adds over the
-    directory swap is *multi-writer safety and snapshot reads*, not
-    rewrite avoidance on MERGE.
+    ParquetSwapBackend); DELETE and UPDATE share one file-scoped
+    rewrite that touches only the files :meth:`prune_files` keeps.
+    What this tier adds over the directory swap is *multi-writer
+    safety and snapshot reads*, not rewrite avoidance on MERGE.
     """
 
     name = "manifest"
@@ -233,21 +250,39 @@ class ManifestParquetBackend:
     def _manifest_path(path: str, version: int) -> str:
         return os.path.join(path, "_log", f"v{version:012d}.json")
 
-    def latest_version(self, path: str) -> int | None:
-        """Highest committed version, or None for no table."""
+    def _versions(self, path: str) -> list[int]:
+        """Committed versions, oldest first (empty for no table). Only
+        ``v<digits>.json`` names are commits; any other ``v*.json`` in
+        ``_log/`` is ignored."""
         log = self._log_dir(path)
         if not os.path.isdir(log):
-            return None
-        versions = [
+            return []
+        return sorted(
             int(f[1:-5])
             for f in os.listdir(log)
             if f.startswith("v") and f.endswith(".json") and f[1:-5].isdigit()
-        ]
-        return max(versions) if versions else None
+        )
+
+    def latest_version(self, path: str) -> int | None:
+        """Highest committed version, or None for no table."""
+        versions = self._versions(path)
+        return versions[-1] if versions else None
 
     def _manifest(self, path: str, version: int) -> dict:
         with open(self._manifest_path(path, version)) as f:
             return json.load(f)
+
+    def _load(self, path: str, version: int | None = None) -> dict:
+        """The manifest of ``version`` (default: the latest);
+        FileNotFoundError when the table or that version is gone."""
+        v = self.latest_version(path) if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"no table at {path}")
+        return self._manifest(path, v)  # FileNotFoundError once expired
+
+    @staticmethod
+    def _schema(man: dict) -> StructType:
+        return StructType.fromJson(json.loads(man["schema"]))
 
     def txn_covered(self, path: str, txn: tuple[str, int]) -> bool:
         """True when the LATEST committed manifest already covers the
@@ -325,7 +360,6 @@ class ManifestParquetBackend:
         import json as _json
 
         import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
 
         from dish_data_pipeline_spark.ops.portable import (
             perm_coeffs,
@@ -416,44 +450,56 @@ class ManifestParquetBackend:
                 )
         return out
 
-    def _bloom_commit_entry(
-        self,
-        spark: SparkSession,
-        path: str,
-        parent_man: dict,
-        new_files: Sequence[str],
-        carried: Sequence[str] = (),
-        prebuilt: dict | None = None,
-    ) -> dict | None:
-        """Bloom manifest entry for a commit: carried files keep
-        their existing filters (immutable bytes → immutable filter),
-        new files get freshly built ones. None when the table never
-        opted into blooms. ``prebuilt`` supplies already-computed
-        filters for the new files (a retry loop builds them ONCE —
-        they depend only on the immutable file bytes, never on the
-        commit base)."""
-        cfg = parent_man.get("bloom")
-        if not cfg:
-            return None
-        carried_set = set(carried)
-        files = {
-            rel: e
-            for rel, e in (cfg.get("files") or {}).items()
-            if rel in carried_set
+    def _write(self, df: DataFrame, path: str, man: dict) -> tuple:
+        """Write ``df`` as fresh data files for a commit onto ``man``:
+        (files, schema json, stats, bloom filters of the new files;
+        empty when the table keeps none). Filters depend only on the
+        immutable file bytes, so a retried commit reuses them."""
+        files, schema, stats = self._write_data(
+            df, path, man.get("stats_cols") or []
+        )
+        cfg = man.get("bloom")
+        blooms = (
+            self._bloom_for_files(df.sparkSession, path, files, cfg)
+            if cfg and files
+            else {}
+        )
+        return files, schema, stats, blooms
+
+    @staticmethod
+    def _link(man: dict, written: Sequence, carried: Sequence[str] = ()) -> dict:
+        """Snapshot fields of a commit onto ``man``: the ``carried``
+        files keep their stats and bloom filters (immutable bytes,
+        immutable metadata), then the ``written`` files follow."""
+        files, schema, stats, blooms = written
+        old = man.get("stats") or {}
+        fields = {
+            "files": [*carried, *files],
+            "schema": schema,
+            "stats": {**{f: old[f] for f in carried if f in old}, **stats},
         }
-        if new_files:
-            files.update(
-                prebuilt
-                if prebuilt is not None
-                else self._bloom_for_files(spark, path, new_files, cfg)
-            )
-        return {
-            "cols": cfg["cols"],
-            "k": cfg["k"],
-            "seed": cfg["seed"],
-            "bits_per_row": cfg["bits_per_row"],
-            "files": files,
+        cfg = man.get("bloom")
+        if cfg:
+            old = cfg.get("files") or {}
+            fields["bloom"] = {
+                **cfg,
+                "files": {**{f: old[f] for f in carried if f in old}, **blooms},
+            }
+        return fields
+
+    @staticmethod
+    def _carry(man: dict) -> dict:
+        """``man``'s snapshot fields verbatim: the start of a
+        metadata-only commit (restore, ALTER)."""
+        fields = {
+            "files": man["files"],
+            "schema": man["schema"],
+            "stats_cols": man.get("stats_cols") or [],
+            "stats": man.get("stats", {}),
         }
+        if man.get("bloom") is not None:
+            fields["bloom"] = man["bloom"]
+        return fields
 
     def _try_commit(self, path: str, version: int, manifest: dict) -> bool:
         """Atomically claim ``version``; False if a rival got there.
@@ -490,26 +536,65 @@ class ManifestParquetBackend:
             except FileNotFoundError:
                 pass
 
-    # -- TableBackend protocol --------------------------------------
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        return self.latest_version(path) is not None
+    def _commit(
+        self,
+        path: str,
+        change: Callable[[dict], dict],
+        retries: int,
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
+        """The commit loop every write after ``create`` runs. Each
+        attempt reads the latest manifest once. If it already covers
+        ``txn``, this returns None before ``change`` runs, so a replay
+        writes nothing. Otherwise ``change(manifest)`` returns the op's
+        own fields: files, schema, stats, bloom, its history marker,
+        and ``stats_cols`` when the op changes them. This loop adds
+        ``version``, ``parent``, the inherited ``stats_cols`` and the
+        rolled-forward ``txns``, then ``_try_commit`` claims
+        ``latest+1``. Returns the committed version, or -1 once
+        ``retries + 1`` attempts have lost the race; what an op does
+        with -1 is its race policy (class docstring)."""
+        for _ in range(retries + 1):
+            base = self.latest_version(path)
+            if base is None:
+                raise FileNotFoundError(f"no table at {path}")
+            man = self._manifest(path, base)
+            txns = dict(man.get("txns", {}))
+            if txn is not None:
+                if txns.get(txn[0], -1) >= txn[1]:
+                    return None  # replayed batch: already applied
+                txns[txn[0]] = txn[1]
+            manifest = {
+                "stats_cols": man.get("stats_cols") or [],
+                **change(man),
+                "version": base + 1,
+                "parent": base,
+                "txns": txns,
+            }
+            if self._try_commit(path, base + 1, manifest):
+                return base + 1
+        return -1
 
-    def read(
-        self, spark: SparkSession, path: str, version: int | None = None
+    @staticmethod
+    def _or_conflict(version: int | None, message: str) -> int | None:
+        """``version``, or :class:`CommitConflict` when the commit lost
+        its race (-1)."""
+        if version == -1:
+            raise CommitConflict(message)
+        return version
+
+    def _open(
+        self,
+        spark: SparkSession,
+        path: str,
+        man: dict,
+        files: Sequence[str] | None = None,
     ) -> DataFrame:
-        """Read a committed snapshot (latest, or time-travel to
-        ``version``). Schema comes from the manifest, so an empty
-        snapshot round-trips and late data files can't widen it."""
-        from pyspark.sql.types import StructType
-
-        v = self.latest_version(path) if version is None else version
-        if v is None or not os.path.exists(self._manifest_path(path, v)):
-            raise FileNotFoundError(
-                f"no committed version {version!r} at {path}"
-            )
-        man = self._manifest(path, v)
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        files = [os.path.join(path, f) for f in man["files"]]
+        """Read ``files`` (default: all) of the snapshot ``man`` under
+        its manifest schema, so an empty snapshot round-trips and late
+        data files can't widen it."""
+        schema = self._schema(man)
+        files = man["files"] if files is None else files
         if not files:
             # one empty slice, not defaultParallelism empty ones —
             # consumers of an empty snapshot (e.g. the first MERGE
@@ -518,7 +603,20 @@ class ManifestParquetBackend:
             return spark.createDataFrame(
                 spark.sparkContext.parallelize([], 1), schema
             )
-        return spark.read.schema(schema).parquet(*files)
+        return spark.read.schema(schema).parquet(
+            *[os.path.join(path, f) for f in files]
+        )
+
+    # -- TableBackend protocol --------------------------------------
+    def exists(self, spark: SparkSession, path: str) -> bool:
+        return self.latest_version(path) is not None
+
+    def read(
+        self, spark: SparkSession, path: str, version: int | None = None
+    ) -> DataFrame:
+        """Read a committed snapshot (latest, or time-travel to
+        ``version``)."""
+        return self._open(spark, path, self._load(path, version))
 
     def create(
         self,
@@ -541,21 +639,13 @@ class ManifestParquetBackend:
         os.makedirs(path, exist_ok=True)
         if self.latest_version(path) is not None:
             raise CommitConflict(f"table already exists at {path}")
-        files, schema, stats = self._write_data(df, path, stats_cols)
-        manifest = {"version": 0, "parent": None, "files": files,
-                    "schema": schema,
-                    "stats_cols": list(stats_cols or []),
-                    "stats": stats, "txns": {}}
+        base: dict = {"stats_cols": list(stats_cols or []), "txns": {}}
         if bloom_cols:
-            cfg = {"cols": list(bloom_cols), "k": BLOOM_K,
-                   "seed": bloom_seed,
-                   "bits_per_row": bloom_bits_per_row}
-            manifest["bloom"] = {
-                **cfg,
-                "files": self._bloom_for_files(
-                    df.sparkSession, path, files, cfg
-                ),
-            }
+            base["bloom"] = {"cols": list(bloom_cols), "k": BLOOM_K,
+                             "seed": bloom_seed,
+                             "bits_per_row": bloom_bits_per_row}
+        manifest = {**base, **self._link(base, self._write(df, path, base)),
+                    "version": 0, "parent": None}
         if not self._try_commit(path, 0, manifest):
             raise CommitConflict(f"concurrent create at {path}")
 
@@ -570,8 +660,9 @@ class ManifestParquetBackend:
         txn: tuple[str, int] | None = None,
         _pre_commit_hook=None,
     ) -> int | None:
-        """Optimistic-retry MERGE (see class docstring). Returns the
-        committed version.
+        """Optimistic-retry MERGE: each attempt recomputes the
+        join-based upsert against the latest snapshot (race policy in
+        the class docstring). Returns the committed version.
 
         ``txn=(app_id, batch_id)`` gives MERGE the same idempotence
         markers as :meth:`append` — the exactly-once device for a
@@ -587,43 +678,25 @@ class ManifestParquetBackend:
         window where a rival can win the version race."""
         from dish_data_pipeline_spark.cache_registry import tracked_persist
 
-        deduped = None
-        for attempt in range(self.max_retries + 1):
-            base = self.latest_version(path)
-            if base is None:
-                raise FileNotFoundError(f"no table at {path}; create() first")
-            man_base = self._manifest(path, base)
-            txns = dict(man_base.get("txns", {}))
-            if txn is not None:
-                if txns.get(txn[0], -1) >= txn[1]:
-                    # replayed batch: already applied — on the first
-                    # attempt, before the dedup plan is persisted
-                    return None
-                txns[txn[0]] = txn[1]
-            if deduped is None:
-                deduped = tracked_persist(
-                    keep_latest(staging, keys, ts_col, tiebreakers)
+        deduped: list = []
+        attempts = itertools.count()
+
+        def change(man):
+            if not deduped:  # after the replay check: a replay persists nothing
+                deduped.append(
+                    tracked_persist(
+                        keep_latest(staging, keys, ts_col, tiebreakers)
+                    )
                 )
-            target = self.read(spark, path, base)
-            stats_cols = man_base.get("stats_cols") or []
-            files, schema, stats = self._write_data(
-                upsert(target, deduped, keys), path, stats_cols
-            )
+            merged = upsert(self._open(spark, path, man), deduped[0], keys)
+            written = self._write(merged, path, man)
             if _pre_commit_hook is not None:
-                _pre_commit_hook(attempt)
-            manifest = {"version": base + 1, "parent": base,
-                        "files": files, "schema": schema,
-                        "stats_cols": stats_cols, "stats": stats,
-                        "txns": txns}
-            bloom = self._bloom_commit_entry(
-                spark, path, man_base, files
-            )
-            if bloom is not None:
-                manifest["bloom"] = bloom
-            if self._try_commit(path, base + 1, manifest):
-                return base + 1
-        raise CommitConflict(
-            f"lost the commit race {self.max_retries + 1} times at {path}"
+                _pre_commit_hook(next(attempts))
+            return self._link(man, written)
+
+        return self._or_conflict(
+            self._commit(path, change, self.max_retries, txn),
+            f"lost the commit race {self.max_retries + 1} times at {path}",
         )
 
     def replace(
@@ -635,9 +708,8 @@ class ManifestParquetBackend:
         History is preserved — old versions still time-travel — and
         stats/bloom config is inherited from the parent manifest.
         The result is position-independent of the version race (the
-        caller composed it from a snapshot THEY chose), so losing a
-        race is always retryable by re-linking the same data files
-        against the new latest, like :meth:`append`.
+        caller composed it from a snapshot THEY chose), so a lost race
+        re-links the same data files (class docstring).
 
         ``txn=(app_id, batch_id)`` carries the same idempotence
         markers as :meth:`append`/:meth:`merge_keep_latest` — a
@@ -645,36 +717,16 @@ class ManifestParquetBackend:
         nothing and returns None, which makes even the GENERIC
         textual-MERGE commit path (execute_merge → replace) an
         exactly-once streaming sink."""
-        spark = df.sparkSession
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}; create() first")
-        man_base = self._manifest(path, base)
-        if txn is not None:
-            covered = dict(man_base.get("txns", {}))
-            if covered.get(txn[0], -1) >= txn[1]:
-                return None  # replayed batch: already applied
-        stats_cols = man_base.get("stats_cols") or []
-        files, schema, stats = self._write_data(df, path, stats_cols)
-        for _ in range(self.max_retries + 1):
-            base = self.latest_version(path)
-            man_base = self._manifest(path, base)
-            txns = dict(man_base.get("txns", {}))
-            if txn is not None:
-                if txns.get(txn[0], -1) >= txn[1]:
-                    return None  # rival writer covered it mid-race
-                txns[txn[0]] = txn[1]
-            manifest = {"version": base + 1, "parent": base,
-                        "files": files, "schema": schema,
-                        "stats_cols": stats_cols, "stats": stats,
-                        "txns": txns}
-            bloom = self._bloom_commit_entry(spark, path, man_base, files)
-            if bloom is not None:
-                manifest["bloom"] = bloom
-            if self._try_commit(path, base + 1, manifest):
-                return base + 1
-        raise CommitConflict(
-            f"lost the commit race {self.max_retries + 1} times at {path}"
+        written: list = []
+
+        def change(man):
+            if not written:
+                written.extend(self._write(df, path, man))
+            return self._link(man, written)
+
+        return self._or_conflict(
+            self._commit(path, change, self.max_retries, txn),
+            f"lost the commit race {self.max_retries + 1} times at {path}",
         )
 
     def append(
@@ -686,12 +738,11 @@ class ManifestParquetBackend:
     ) -> int | None:
         """Transactional append: commit the parent snapshot's files
         PLUS ``df``'s fresh files as a new version. Appends carry no
-        read-modify-write dependency, so losing a version race is
-        always retryable without recompute — re-read the new latest
-        and re-commit the SAME data files against it (unlike MERGE,
-        whose result depends on the base it read). The ingest path a
-        streaming ``foreachBatch`` or batch loader uses. Returns the
-        committed version.
+        read-modify-write dependency, so a lost version race re-links
+        the SAME data files against the new latest (class docstring;
+        unlike MERGE, whose result depends on the base it read). The
+        ingest path a streaming ``foreachBatch`` or batch loader
+        uses. Returns the committed version.
 
         ``merge_schema=True`` is the Delta ``mergeSchema`` analog —
         additive schema evolution with NO data rewrite: columns of
@@ -711,124 +762,63 @@ class ManifestParquetBackend:
         every manifest rolls forward a ``txns`` map of the highest
         batch id committed per app, and an append whose batch id is
         already covered commits NOTHING and returns None (the check
-        re-runs inside the commit loop, so a rival's commit of the
+        re-runs on every commit attempt, so a rival's commit of the
         same txn between check and link is caught by the version
         race, never double-applied). Batch ids per app must be
         monotonic (Structured Streaming's are)."""
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}; create() first")
-        man0 = self._manifest(path, base)
-        if txn is not None and (
-            man0.get("txns", {}).get(txn[0], -1) >= txn[1]
-        ):
-            return None  # fast path: replay detected before any write
         # compare (name, type) shape, not the raw schema JSON —
         # nullability and field metadata legitimately differ between
         # a createDataFrame batch and the stored table schema
-        from pyspark.sql.types import StructField, StructType
-
-        table_schema = StructType.fromJson(json.loads(man0["schema"]))
         shape = [(f.name, f.dataType.simpleString()) for f in df.schema]
-        want = [(f.name, f.dataType.simpleString()) for f in table_schema]
-        if merge_schema:
-            want_types = dict(want)
-            conflicts = [
-                (n, t, want_types[n])
-                for n, t in shape
-                if n in want_types and want_types[n] != t
-            ]
-            if conflicts:
-                raise ValueError(
-                    f"append type conflicts {conflicts} at {path}; "
-                    "mergeSchema only ADDS columns, it never retypes"
-                )
-        elif shape != want:
-            # the commit reuses the table schema verbatim; silently
-            # appending differently-shaped files would make reads
-            # null-fill or fail later, far from the cause
-            raise ValueError(
-                f"append schema {shape} differs from table schema "
-                f"{want} at {path}; align the batch to the table "
-                "schema, pass merge_schema=True for additive "
-                "evolution, or recreate the table"
-            )
-        # stats_cols is fixed at create() and inherited by every
-        # commit, so reading it from any manifest is safe; the data
-        # files are written ONCE — only the commit loop retries
-        stats_cols = man0.get("stats_cols") or []
-        files, _schema, stats = self._write_data(df, path, stats_cols)
-        # bloom filters for the new files depend only on their
-        # immutable bytes — build once, outside the retry loop (a
-        # lost race re-reads the base but must not re-aggregate)
-        bloom_cfg = man0.get("bloom")
-        new_bloom = (
-            self._bloom_for_files(df.sparkSession, path, files, bloom_cfg)
-            if bloom_cfg and files
-            else None
-        )
-        for _ in range(self.max_retries + 1):
-            base = self.latest_version(path)
-            man = self._manifest(path, base)
-            txns = dict(man.get("txns", {}))
-            if txn is not None:
-                if txns.get(txn[0], -1) >= txn[1]:
-                    return None  # rival committed our txn mid-race
-                txns[txn[0]] = txn[1]
-            commit_schema = man["schema"]
+        written: list = []
+
+        def change(man):
+            table = self._schema(man)
+            have = {f.name: f.dataType.simpleString() for f in table}
             if merge_schema:
-                # merge against the schema of the base we are
-                # committing onto — a rival append may have evolved
-                # it since man0; dropping THEIR columns here would
-                # un-evolve the table
-                latest = StructType.fromJson(json.loads(man["schema"]))
-                have = {
-                    f.name: f.dataType.simpleString()
-                    for f in latest.fields
-                }
+                # checked against every attempt's base: a rival append
+                # may have evolved the schema since the first one
                 clash = [
-                    (f.name, f.dataType.simpleString(), have[f.name])
-                    for f in df.schema
-                    if f.name in have
-                    and have[f.name] != f.dataType.simpleString()
+                    (n, t, have[n])
+                    for n, t in shape
+                    if n in have and have[n] != t
                 ]
                 if clash:
-                    # a rival's evolution claimed the name with a
-                    # different type since man0 — same rule as the
-                    # up-front check
                     raise ValueError(
                         f"append type conflicts {clash} at {path}; "
-                        "mergeSchema only ADDS columns, never retypes"
+                        "mergeSchema only ADDS columns, it never retypes"
                     )
-                extra = [
-                    StructField(f.name, f.dataType, nullable=True)
-                    for f in df.schema
-                    if f.name not in have
-                ]
-                if extra:
-                    commit_schema = StructType(
-                        list(latest.fields) + extra
-                    ).json()
-            manifest = {"version": base + 1, "parent": base,
-                        "files": man["files"] + files,
-                        "schema": commit_schema,
-                        "stats_cols": stats_cols,
-                        "stats": {**man.get("stats", {}), **stats},
-                        "txns": txns}
-            bloom = self._bloom_commit_entry(
-                df.sparkSession,
-                path,
-                man,
-                files,
-                carried=man["files"],
-                prebuilt=new_bloom,
-            )
-            if bloom is not None:
-                manifest["bloom"] = bloom
-            if self._try_commit(path, base + 1, manifest):
-                return base + 1
-        raise CommitConflict(
-            f"lost the append race {self.max_retries + 1} times at {path}"
+            elif not written and shape != list(have.items()):
+                # the commit reuses the table schema verbatim; silently
+                # appending differently-shaped files would make reads
+                # null-fill or fail later, far from the cause
+                raise ValueError(
+                    f"append schema {shape} differs from table schema "
+                    f"{list(have.items())} at {path}; align the batch to "
+                    "the table schema, pass merge_schema=True for "
+                    "additive evolution, or recreate the table"
+                )
+            if not written:
+                written.extend(self._write(df, path, man))
+            # merge onto the schema of the base we commit onto, so a
+            # rival append's evolution is kept, not un-evolved
+            extra = [
+                StructField(f.name, f.dataType, nullable=True)
+                for f in df.schema
+                if merge_schema and f.name not in have
+            ]
+            return {
+                **self._link(man, written, carried=man["files"]),
+                "schema": (
+                    StructType(table.fields + extra).json()
+                    if extra
+                    else man["schema"]
+                ),
+            }
+
+        return self._or_conflict(
+            self._commit(path, change, self.max_retries, txn),
+            f"lost the append race {self.max_retries + 1} times at {path}",
         )
 
     def compact(
@@ -841,13 +831,11 @@ class ManifestParquetBackend:
         """Small-files maintenance: rewrite the LATEST snapshot's
         rows into ``target_files`` files and commit the result as a
         new version. Readers of every existing version are untouched
-        (immutable data files + snapshot manifests), and the usual
-        atomic-create commit applies — but unlike MERGE, compaction
-        carries no new content, so on losing a version race to a
-        concurrent writer it ABORTS (returns -1; committing would
-        replace the winner's rows with a stale snapshot) instead of
-        retrying. Re-run when quiet; vacuum() afterwards reclaims
-        the superseded files. Returns the committed version.
+        (immutable data files + snapshot manifests). Compaction
+        carries no new content, so on losing the version race it
+        ABORTS and returns -1 (class docstring). Re-run when quiet;
+        vacuum() afterwards reclaims the superseded files. Returns
+        the committed version.
 
         ``zorder_by`` (two or more integer-castable columns) is the
         ``OPTIMIZE ... ZORDER BY`` analog: rows are re-laid-out along
@@ -855,36 +843,66 @@ class ManifestParquetBackend:
         writing, so the footer min/max stats this table records
         become tight rectangles on EVERY listed column and
         :meth:`scan` prunes files for predicates on any of them."""
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        df = self.read(spark, path, base)
-        if zorder_by:
-            from pyspark.sql import functions as F
 
-            from dish_data_pipeline_spark.ops.layout import with_zvalue
+        def change(man):
+            df = self._open(spark, path, man)
+            if zorder_by:
+                from dish_data_pipeline_spark.ops.layout import with_zvalue
 
-            cols = df.columns
-            df = (
-                with_zvalue(df, list(zorder_by), bits=8, out_col="_zv")
-                .repartitionByRange(target_files, F.col("_zv"))
-                .sortWithinPartitions("_zv")
-                .select(*cols)
+                df = (
+                    with_zvalue(df, list(zorder_by), bits=8, out_col="_zv")
+                    .repartitionByRange(target_files, F.col("_zv"))
+                    .sortWithinPartitions("_zv")
+                    .select(*df.columns)
+                )
+            else:
+                df = df.coalesce(target_files)
+            written = self._write(df, path, man)
+            return {**self._link(man, written), "compaction": True}
+
+        return self._commit(path, change, 0)
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        path: str,
+        marker: dict,
+        intervals: dict[str, tuple] | None,
+        equals: dict | None,
+        rows_for: Callable[[StructType], Callable[[DataFrame], DataFrame]],
+    ) -> tuple[int, int, int]:
+        """The file-scoped rewrite behind DELETE and UPDATE. Files the
+        manifest's stats and blooms prove outside ``intervals`` and
+        ``equals`` are carried byte-unchanged with their metadata; the
+        rest are read, passed through ``rows_for(schema)`` (which
+        validates against the snapshot schema and returns the row
+        transform) and written as new files. ``marker`` names the op
+        in the manifest history. Aborts on a lost race (class
+        docstring). Returns (committed version or -1,
+        n_files_rewritten, n_files_carried)."""
+        counts: list[int] = []
+
+        def change(man):
+            rows = rows_for(self._schema(man))
+            affected = self._prune(man, intervals or {}, equals)
+            gone = set(affected)
+            carried = [f for f in man["files"] if f not in gone]
+            written = (
+                self._write(
+                    rows(self._open(spark, path, man, affected)), path, man
+                )
+                if affected
+                else ([], None, {}, {})
             )
-        else:
-            df = df.coalesce(target_files)
-        man = self._manifest(path, base)
-        stats_cols = man.get("stats_cols") or []
-        files, schema, stats = self._write_data(df, path, stats_cols)
-        manifest = {"version": base + 1, "parent": base, "files": files,
-                    "schema": schema, "compaction": True,
-                    "stats_cols": stats_cols, "stats": stats,
-                    "txns": man.get("txns", {})}
-        bloom = self._bloom_commit_entry(spark, path, man, files)
-        if bloom is not None:
-            manifest["bloom"] = bloom
-        committed = self._try_commit(path, base + 1, manifest)
-        return base + 1 if committed else -1
+            counts.extend([len(affected), len(carried)])
+            return {
+                **self._link(man, written, carried),
+                "schema": man["schema"],
+                **marker,
+            }
+
+        version = self._commit(path, change, 0)
+        return version, *counts
 
     def delete_where(
         self,
@@ -912,57 +930,14 @@ class ManifestParquetBackend:
         rows where the predicate is NULL survive, standard SQL DELETE
         semantics — and only their stats recompute.
 
-        Same race discipline as :meth:`compact`: the rewrite depends
-        on the base it read, so on losing the version race this
-        ABORTS (returns version -1) instead of retrying — committing
-        anyway could resurrect a concurrent writer's rows.
-
+        On losing the version race this ABORTS (class docstring).
         Returns (committed version or -1, n_files_rewritten,
         n_files_carried)."""
-        from pyspark.sql.types import StructType
-
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        man = self._manifest(path, base)
-        affected, _total = self.prune_files(
-            path, intervals or {}, base, equals=equals
-        )
-        affected_set = set(affected)
-        carried = [f for f in man["files"] if f not in affected_set]
-        stats_cols = man.get("stats_cols") or []
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        new_files: list[str] = []
-        new_stats: dict = {}
-        if affected:
-            df = spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in affected]
-            )
-            remain = df.filter(f"NOT coalesce(({predicate}), false)")
-            new_files, _schema, new_stats = self._write_data(
-                remain, path, stats_cols
-            )
-        stats = {
-            f: s
-            for f, s in (man.get("stats") or {}).items()
-            if f not in affected_set
-        }
-        stats.update(new_stats)
-        manifest = {"version": base + 1, "parent": base,
-                    "files": carried + new_files,
-                    "schema": man["schema"], "delete": predicate,
-                    "stats_cols": stats_cols, "stats": stats,
-                    "txns": man.get("txns", {})}
-        bloom = self._bloom_commit_entry(
-            spark, path, man, new_files, carried=carried
-        )
-        if bloom is not None:
-            manifest["bloom"] = bloom
-        committed = self._try_commit(path, base + 1, manifest)
-        return (
-            base + 1 if committed else -1,
-            len(affected),
-            len(carried),
+        return self._rewrite(
+            spark, path, {"delete": predicate}, intervals, equals,
+            lambda _schema: lambda df: df.filter(
+                f"NOT coalesce(({predicate}), false)"
+            ),
         )
 
     def update_where(
@@ -987,71 +962,35 @@ class ManifestParquetBackend:
         files rewrite wholesale (matching and non-matching rows
         alike) so row count is invariant.
 
-        Same race discipline as :meth:`delete_where`: ABORTS
-        (version -1) on losing the version race. Returns (committed
-        version or -1, n_files_rewritten, n_files_carried)."""
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import StructType
+        On losing the version race this ABORTS (class docstring).
+        Returns (committed version or -1, n_files_rewritten,
+        n_files_carried)."""
 
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        man = self._manifest(path, base)
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        t_fields = {f.name: f.dataType for f in schema.fields}
-        unknown = [c for c in assignments if c not in t_fields]
-        if unknown:
-            raise ValueError(
-                f"UPDATE sets unknown target columns {unknown}"
-            )
-        affected, _total = self.prune_files(
-            path, intervals or {}, base, equals=equals
-        )
-        affected_set = set(affected)
-        carried = [f for f in man["files"] if f not in affected_set]
-        stats_cols = man.get("stats_cols") or []
-        new_files: list[str] = []
-        new_stats: dict = {}
-        if affected:
-            df = spark.read.schema(schema).parquet(
-                *[os.path.join(path, f) for f in affected]
-            )
-            applies = F.expr(f"coalesce(({predicate}), false)")
-            updated = df.select(
-                *[
-                    F.when(
-                        applies,
-                        F.expr(assignments[f.name]).cast(f.dataType),
-                    ).otherwise(F.col(f.name)).alias(f.name)
-                    if f.name in assignments
-                    else F.col(f.name)
-                    for f in schema.fields
-                ]
-            )
-            new_files, _schema, new_stats = self._write_data(
-                updated, path, stats_cols
-            )
-        stats = {
-            f: s
-            for f, s in (man.get("stats") or {}).items()
-            if f not in affected_set
-        }
-        stats.update(new_stats)
-        manifest = {"version": base + 1, "parent": base,
-                    "files": carried + new_files,
-                    "schema": man["schema"], "update": predicate,
-                    "stats_cols": stats_cols, "stats": stats,
-                    "txns": man.get("txns", {})}
-        bloom = self._bloom_commit_entry(
-            spark, path, man, new_files, carried=carried
-        )
-        if bloom is not None:
-            manifest["bloom"] = bloom
-        committed = self._try_commit(path, base + 1, manifest)
-        return (
-            base + 1 if committed else -1,
-            len(affected),
-            len(carried),
+        def rows_for(schema):
+            unknown = [c for c in assignments if c not in schema.names]
+            if unknown:
+                raise ValueError(
+                    f"UPDATE sets unknown target columns {unknown}"
+                )
+
+            def rows(df):
+                applies = F.expr(f"coalesce(({predicate}), false)")
+                return df.select(
+                    *[
+                        F.when(
+                            applies,
+                            F.expr(assignments[f.name]).cast(f.dataType),
+                        ).otherwise(F.col(f.name)).alias(f.name)
+                        if f.name in assignments
+                        else F.col(f.name)
+                        for f in schema.fields
+                    ]
+                )
+
+            return rows
+
+        return self._rewrite(
+            spark, path, {"update": predicate}, intervals, equals, rows_for
         )
 
     def changes(
@@ -1103,15 +1042,19 @@ class ManifestParquetBackend:
         prune unsoundly); columns the table never bloom-indexed are
         a sound keep-all no-op regardless of value type. Returns
         (kept relative files, total files)."""
+        man = self._load(path, version)
+        return self._prune(man, intervals, equals), len(man["files"])
+
+    @staticmethod
+    def _prune(
+        man: dict, intervals: dict[str, tuple], equals: dict | None = None
+    ) -> list[str]:
+        """:meth:`prune_files` over an already-read manifest."""
         from dish_data_pipeline_spark.ops.portable import (
             perm_coeffs,
             py_phash,
         )
 
-        v = self.latest_version(path) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no table at {path}")
-        man = self._manifest(path, v)
         stats = man.get("stats", {})
         bloom = man.get("bloom") or {}
         bloom_files = bloom.get("files", {})
@@ -1167,7 +1110,7 @@ class ManifestParquetBackend:
                         break
             if ok:
                 kept.append(f)
-        return kept, len(man["files"])
+        return kept
 
     def scan(
         self,
@@ -1183,19 +1126,8 @@ class ManifestParquetBackend:
         PROVABLY contain no match); rows outside the predicates may
         also be present — apply the exact predicate on top, as any
         data-skipping reader does."""
-        from pyspark.sql.types import StructType
-
-        v = self.latest_version(path) if version is None else version
-        kept, _total = self.prune_files(path, intervals, v, equals=equals)
-        man = self._manifest(path, v)
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        if not kept:
-            return spark.createDataFrame(
-                spark.sparkContext.parallelize([], 1), schema
-            )
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(path, f) for f in kept]
-        )
+        man = self._load(path, version)
+        return self._open(spark, path, man, self._prune(man, intervals, equals))
 
     def count_rows(self, path: str, version: int | None = None) -> int | None:
         """Metadata-only ``COUNT(*)``: sum of the per-file row counts
@@ -1205,10 +1137,7 @@ class ManifestParquetBackend:
         Returns None when any live file predates the row-count stat
         (a table written by an older version) — callers fall back to
         a scan; soundness over guessing."""
-        v = self.latest_version(path) if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no table at {path}")
-        man = self._manifest(path, v)
+        man = self._load(path, version)
         stats = man.get("stats") or {}
         total = 0
         for f in man["files"]:
@@ -1230,30 +1159,16 @@ class ManifestParquetBackend:
         carried from the CURRENT latest (not the restore target) —
         a restore must not make replayed ingest batches re-apply.
         Returns the committed version; raises CommitConflict if a
-        rival commits first (re-examine state before retrying — the
-        rival may have been another restore)."""
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        target = self._manifest(path, version)  # raises if expired
-        latest = self._manifest(path, base)
-        manifest = {
-            "version": base + 1,
-            "parent": base,
-            "restore_of": version,
-            "files": target["files"],
-            "schema": target["schema"],
-            "stats_cols": target.get("stats_cols") or [],
-            "stats": target.get("stats", {}),
-            "txns": latest.get("txns", {}),
-        }
-        if target.get("bloom") is not None:
-            manifest["bloom"] = target["bloom"]
-        if not self._try_commit(path, base + 1, manifest):
-            raise CommitConflict(
-                f"lost the restore race at {path}; re-examine state"
-            )
-        return base + 1
+        rival commits first (class docstring)."""
+
+        def change(man):
+            target = self._manifest(path, version)  # raises if expired
+            return {**self._carry(target), "restore_of": version}
+
+        return self._or_conflict(
+            self._commit(path, change, 0),
+            f"lost the restore race at {path}; re-examine state",
+        )
 
     def history(self, path: str) -> list[dict]:
         """``DESCRIBE HISTORY`` analog: one record per committed
@@ -1264,14 +1179,9 @@ class ManifestParquetBackend:
         file count, and the txn marker map. Driver-side metadata
         only (manifests are small JSON); expired versions are
         absent."""
-        log = self._log_dir(path)
-        if not os.path.isdir(log):
-            return []
         out = []
-        for f in sorted(os.listdir(log)):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
-            m = self._manifest(path, int(f[1:-5]))
+        for v in self._versions(path):
+            m = self._manifest(path, v)
             if m.get("restore_of") is not None:
                 op = f"restore(v{m['restore_of']})"
             elif m.get("compaction"):
@@ -1306,33 +1216,24 @@ class ManifestParquetBackend:
         existed" must be loud, not silently pinned to v0. Versions
         whose manifests predate commit timestamps (older writers)
         are not time-addressable and are skipped."""
-        log = self._log_dir(path)
-        if not os.path.isdir(log):
+        versions = self._versions(path)
+        if not versions:
             raise FileNotFoundError(f"no table at {path}")
-        best: int | None = None
-        earliest: float | None = None
-        stamped = False
-        for f in sorted(os.listdir(log)):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
-            m = self._manifest(path, int(f[1:-5]))
-            cts = m.get("commit_ts")
-            if cts is None:
-                continue
-            stamped = True
-            if earliest is None or cts < earliest:
-                earliest = cts
-            if cts <= ts and (best is None or m["version"] > best):
-                best = m["version"]
+        stamps: dict[int, float] = {}
+        for v in versions:
+            cts = self._manifest(path, v).get("commit_ts")
+            if cts is not None:
+                stamps[v] = cts
+        best = max((v for v, cts in stamps.items() if cts <= ts), default=None)
         if best is None:
-            if not stamped:
+            if not stamps:
                 raise ValueError(
                     f"table at {path} has no commit timestamps (written "
                     "before timestamps were recorded) — use VERSION AS OF"
                 )
             raise ValueError(
                 f"timestamp {ts} predates the earliest available commit "
-                f"({earliest}) at {path}"
+                f"({min(stamps.values())}) at {path}"
             )
         return best
 
@@ -1364,100 +1265,88 @@ class ManifestParquetBackend:
         resolution is case-insensitive and a case-variant duplicate
         would be ambiguous at read time. Returns the committed
         version."""
-        from pyspark.sql.types import (  # noqa: PLC0415
-            StructField,
-            StructType,
-            _parse_datatype_string,
-        )
+        from pyspark.sql.types import _parse_datatype_string  # noqa: PLC0415
 
         if not coldefs:
             raise ValueError("ALTER TABLE ADD COLUMNS: empty column list")
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        latest = self._manifest(path, base)
-        schema = StructType.fromJson(json.loads(latest["schema"]))
-        # validate EVERYTHING first — names (vs schema and vs each
-        # other, case-insensitively), types, physical absence — then
-        # commit once
-        taken = {fld.name.lower() for fld in schema.fields}
-        new_fields = []
-        for name, ddl_type in coldefs:
-            if name.lower() in taken:
-                raise ValueError(
-                    f"column {name!r} already exists in {path} (names "
-                    "resolve case-insensitively) — ALTER TABLE supports "
-                    "only additive evolution (a type change means "
-                    "rewriting committed files: use CREATE OR REPLACE "
-                    "TABLE or MERGE)"
-                )
-            taken.add(name.lower())
-            new_fields.append(
-                StructField(name, _parse_datatype_string(ddl_type), True)
-            )
-        # resurrection guard: a column DROPPED earlier is gone from
-        # the manifest schema but its bytes remain in any live file
-        # written before the drop — re-adding the name would read
-        # those stale values back instead of NULL (Spark resolves
-        # the schema against physical columns case-insensitively,
-        # so the guard compares folded names). Cheap path first: if
-        # the UNBROKEN manifest history (back to v0) records no
-        # drop_column of the name, no live file can carry it and the
-        # footer sweep is skipped — the common estate-scale ADD
-        # stays metadata-only. With a drop on record (or history
-        # expired, so we cannot know), one footer-schema read per
-        # live file (driver-side, maintenance-path cost, the same
-        # class as stats collection) must prove the name physically
-        # absent; otherwise the re-add needs a rewrite.
-        suspect = [
-            fld.name
-            for fld in new_fields
-            if self._name_may_linger(path, fld.name, latest)
-        ]
-        if suspect:
-            import pyarrow.parquet as pq  # noqa: PLC0415
 
-            folded = {n.lower() for n in suspect}
-            for rel in latest["files"]:
-                physical = {
-                    n.lower()
-                    for n in pq.read_schema(os.path.join(path, rel)).names
-                }
-                clash = folded & physical
-                if clash:
+        def change(latest):
+            schema = self._schema(latest)
+            # validate EVERYTHING first — names (vs schema and vs each
+            # other, case-insensitively), types, physical absence —
+            # then commit once
+            taken = {fld.name.lower() for fld in schema.fields}
+            new_fields = []
+            for name, ddl_type in coldefs:
+                if name.lower() in taken:
                     raise ValueError(
-                        f"column(s) {sorted(clash)} still exist physically "
-                        f"in live file {rel} (dropped earlier?) — "
-                        "re-adding would resurrect stale values. Rewrite "
-                        "first (OPTIMIZE after the drop, or CREATE OR "
-                        "REPLACE TABLE)"
+                        f"column {name!r} already exists in {path} (names "
+                        "resolve case-insensitively) — ALTER TABLE supports "
+                        "only additive evolution (a type change means "
+                        "rewriting committed files: use CREATE OR REPLACE "
+                        "TABLE or MERGE)"
                     )
-        new_schema = StructType(list(schema.fields) + new_fields)
-        rendered = ", ".join(
-            f"{fld.name} {fld.dataType.simpleString()}" for fld in new_fields
-        )
-        marker = (
-            f"add_column({rendered})"
-            if len(new_fields) == 1
-            else f"add_columns({rendered})"
-        )
-        manifest = {
-            "version": base + 1,
-            "parent": base,
-            "alter": marker,
-            "files": latest["files"],
-            "schema": json.dumps(new_schema.jsonValue()),
-            "stats_cols": latest.get("stats_cols") or [],
-            "stats": latest.get("stats", {}),
-            "txns": latest.get("txns", {}),
-        }
-        if latest.get("bloom") is not None:
-            manifest["bloom"] = latest["bloom"]
-        if not self._try_commit(path, base + 1, manifest):
-            raise CommitConflict(
-                f"lost the ALTER race at {path}; re-examine state"
+                taken.add(name.lower())
+                new_fields.append(
+                    StructField(name, _parse_datatype_string(ddl_type), True)
+                )
+            # resurrection guard: a column DROPPED earlier is gone from
+            # the manifest schema but its bytes remain in any live file
+            # written before the drop — re-adding the name would read
+            # those stale values back instead of NULL (Spark resolves
+            # the schema against physical columns case-insensitively,
+            # so the guard compares folded names). Cheap path first: if
+            # the UNBROKEN manifest history (back to v0) records no
+            # drop_column of the name, no live file can carry it and
+            # the footer sweep is skipped — the common estate-scale ADD
+            # stays metadata-only. With a drop on record (or history
+            # expired, so we cannot know), one footer-schema read per
+            # live file (driver-side, maintenance-path cost, the same
+            # class as stats collection) must prove the name physically
+            # absent; otherwise the re-add needs a rewrite.
+            suspect = [
+                fld.name
+                for fld in new_fields
+                if self._name_may_linger(path, fld.name, latest)
+            ]
+            if suspect:
+                import pyarrow.parquet as pq  # noqa: PLC0415
+
+                folded = {n.lower() for n in suspect}
+                for rel in latest["files"]:
+                    physical = {
+                        n.lower()
+                        for n in pq.read_schema(os.path.join(path, rel)).names
+                    }
+                    clash = folded & physical
+                    if clash:
+                        raise ValueError(
+                            f"column(s) {sorted(clash)} still exist "
+                            f"physically in live file {rel} (dropped "
+                            "earlier?) — re-adding would resurrect stale "
+                            "values. Rewrite first (OPTIMIZE after the "
+                            "drop, or CREATE OR REPLACE TABLE)"
+                        )
+            new_schema = StructType(list(schema.fields) + new_fields)
+            rendered = ", ".join(
+                f"{fld.name} {fld.dataType.simpleString()}"
+                for fld in new_fields
             )
-        return base + 1
+            marker = (
+                f"add_column({rendered})"
+                if len(new_fields) == 1
+                else f"add_columns({rendered})"
+            )
+            return {
+                **self._carry(latest),
+                "alter": marker,
+                "schema": json.dumps(new_schema.jsonValue()),
+            }
+
+        return self._or_conflict(
+            self._commit(path, change, 0),
+            f"lost the ALTER race at {path}; re-examine state",
+        )
 
     def _name_may_linger(self, path: str, name: str, latest: dict) -> bool:
         """True when a live data file MIGHT physically carry ``name``
@@ -1495,56 +1384,48 @@ class ManifestParquetBackend:
         manifest (stale prune metadata must not outlive the
         column). Dropping the last column is rejected. Returns the
         committed version."""
-        from pyspark.sql.types import StructType  # noqa: PLC0415
 
-        base = self.latest_version(path)
-        if base is None:
-            raise FileNotFoundError(f"no table at {path}")
-        latest = self._manifest(path, base)
-        schema = StructType.fromJson(json.loads(latest["schema"]))
-        if not any(fld.name == name for fld in schema.fields):
-            raise ValueError(
-                f"column {name!r} does not exist in {path}; have "
-                f"{[fld.name for fld in schema.fields]}"
-            )
-        kept = [fld for fld in schema.fields if fld.name != name]
-        if not kept:
-            raise ValueError(
-                f"cannot drop {name!r}: it is the last column of {path}"
-            )
-        stats = {
-            rel: {k: v for k, v in s.items() if k != name}
-            for rel, s in (latest.get("stats") or {}).items()
-        }
-        manifest = {
-            "version": base + 1,
-            "parent": base,
-            "alter": f"drop_column({name})",
-            "files": latest["files"],
-            "schema": json.dumps(StructType(kept).jsonValue()),
-            "stats_cols": [
-                c for c in (latest.get("stats_cols") or []) if c != name
-            ],
-            "stats": stats,
-            "txns": latest.get("txns", {}),
-        }
-        bloom = latest.get("bloom")
-        if bloom is not None:
-            cols = [c for c in bloom["cols"] if c != name]
+        def change(latest):
+            schema = self._schema(latest)
+            if name not in schema.names:
+                raise ValueError(
+                    f"column {name!r} does not exist in {path}; have "
+                    f"{schema.names}"
+                )
+            kept = [fld for fld in schema.fields if fld.name != name]
+            if not kept:
+                raise ValueError(
+                    f"cannot drop {name!r}: it is the last column of {path}"
+                )
+            fields = {
+                **self._carry(latest),
+                "alter": f"drop_column({name})",
+                "schema": json.dumps(StructType(kept).jsonValue()),
+                "stats_cols": [
+                    c for c in (latest.get("stats_cols") or []) if c != name
+                ],
+                "stats": {
+                    rel: {k: v for k, v in s.items() if k != name}
+                    for rel, s in (latest.get("stats") or {}).items()
+                },
+            }
+            bloom = fields.pop("bloom", None)
+            cols = [c for c in (bloom or {}).get("cols", []) if c != name]
             if cols:
-                manifest["bloom"] = {
-                    **{k: v for k, v in bloom.items() if k != "files"},
+                fields["bloom"] = {
+                    **bloom,
                     "cols": cols,
                     "files": {
                         rel: {c: e for c, e in entry.items() if c != name}
                         for rel, entry in (bloom.get("files") or {}).items()
                     },
                 }
-        if not self._try_commit(path, base + 1, manifest):
-            raise CommitConflict(
-                f"lost the ALTER race at {path}; re-examine state"
-            )
-        return base + 1
+            return fields
+
+        return self._or_conflict(
+            self._commit(path, change, 0),
+            f"lost the ALTER race at {path}; re-examine state",
+        )
 
     def drop_table(self, path: str) -> None:
         """``DROP TABLE`` analog: remove the table directory — log,
@@ -1572,15 +1453,7 @@ class ManifestParquetBackend:
         manifest fetch. Returns the expired version numbers."""
         if keep_last < 1:
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-        log = self._log_dir(path)
-        if not os.path.isdir(log):
-            return []
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(log)
-            if f.startswith("v") and f.endswith(".json") and f[1:-5].isdigit()
-        )
-        expired = versions[:-keep_last]
+        expired = self._versions(path)[:-keep_last]
         for v in expired:
             os.remove(self._manifest_path(path, v))
         return expired
@@ -1602,9 +1475,8 @@ class ManifestParquetBackend:
         if not os.path.isdir(log):
             return []
         referenced: set[str] = set()
-        for f in os.listdir(log):
-            if f.startswith("v") and f.endswith(".json"):
-                referenced.update(self._manifest(path, int(f[1:-5]))["files"])
+        for v in self._versions(path):
+            referenced.update(self._manifest(path, v)["files"])
         referenced_dirs = {os.path.dirname(f) for f in referenced}
         deleted: list[str] = []
         data = os.path.join(path, "data")

@@ -2,24 +2,11 @@
 
 Kept alongside pyproject.toml so `pip install -e .` works even on
 environments without the `wheel` package (pip falls back to the
-legacy develop path when no [build-system] table is declared).
+legacy develop path when no [build-system] table is declared). All
+metadata lives in pyproject.toml's [project] table; setuptools reads
+it from there.
 """
 
-from setuptools import find_packages, setup
+from setuptools import setup
 
-setup(
-    name="dish-data-pipeline-spark",
-    version="2.0.0",
-    description=(
-        "PySpark-native analytics engine with the dish-data-pipeline "
-        "query surface plus large-scale dedup/similarity/text/"
-        "multimodal operators"
-    ),
-    packages=find_packages(include=["dish_data_pipeline_spark*"]),
-    python_requires=">=3.10",
-    install_requires=["pyspark>=3.5", "pandas", "pyarrow"],
-    extras_require={
-        "rest": ["requests"],
-        "test": ["pytest", "hypothesis", "duckdb", "numpy"],
-    },
-)
+setup()

@@ -1412,3 +1412,138 @@ def test_update_where_scopes_rewrite_by_stats(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown target columns"):
         be.update_where(spark, path, {"nope": "1"}, "true")
     assert be.latest_version(path) == 1
+
+
+# --- the shared commit loop: what every commit carries forward ------
+def test_stray_log_name_is_not_a_version(spark, tmp_path):
+    """A ``v*.json`` in ``_log/`` whose name is not a number is not a
+    commit: history, TIMESTAMP AS OF and VACUUM skip it, as
+    latest_version does."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "stray")
+    be = ManifestParquetBackend()
+    be.create(spark.range(3).select(F.col("id").alias("k")), path)
+    be.append(spark.range(3, 5).select(F.col("id").alias("k")), path)
+    with open(os.path.join(be._log_dir(path), "v_notes.json"), "w") as f:
+        f.write("{}")
+    assert be.latest_version(path) == 1
+    assert [h["version"] for h in be.history(path)] == [0, 1]
+    assert be.version_at_timestamp(path, time.time()) == 1
+    assert be.vacuum(path, min_age_seconds=0) == []
+    assert be.read(spark, path).count() == 5
+
+
+def test_replace_builds_blooms_once_across_a_lost_race(spark, tmp_path):
+    """replace() writes its data files and their bloom filters once:
+    a lost version race re-links them, it does not rebuild."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "rbloom")
+    be = _bloom_table(spark, path)
+    rival = ManifestParquetBackend()
+    built: list[int] = []
+    state = {"fired": False}
+    orig_bloom, orig_commit = be._bloom_for_files, be._try_commit
+
+    def counting_bloom(*args):
+        built.append(1)
+        return orig_bloom(*args)
+
+    def losing_first(path_, version, manifest):
+        if not state["fired"]:
+            state["fired"] = True
+            rival.append(
+                spark.range(900, 901).select(
+                    F.col("id").alias("k"), F.col("id").alias("u")
+                ),
+                path_,
+            )
+        return orig_commit(path_, version, manifest)
+
+    be._bloom_for_files, be._try_commit = counting_bloom, losing_first
+    try:
+        v = be.replace(
+            spark.range(5).select(
+                F.col("id").alias("k"), (F.col("id") + 7).alias("u")
+            ),
+            path,
+        )
+    finally:
+        be._bloom_for_files, be._try_commit = orig_bloom, orig_commit
+    assert v == 2  # lost v1 to the rival, committed v2
+    assert built == [1]
+    man = be._manifest(path, 2)
+    assert set(man["bloom"]["files"]) == set(man["files"])
+
+
+_OPS = {
+    "merge_keep_latest": (
+        lambda be, spark, p, df: be.merge_keep_latest(
+            spark, p, df, ["k"], "ts"
+        ),
+        "write",
+    ),
+    "replace": (lambda be, spark, p, df: be.replace(df, p), "write"),
+    "append": (lambda be, spark, p, df: be.append(df, p), "write"),
+    "compact": (lambda be, spark, p, df: be.compact(spark, p), "compact"),
+    "delete_where": (
+        lambda be, spark, p, df: be.delete_where(
+            spark, p, "k = 1", intervals={"k": (1, 1)}
+        )[0],
+        "delete(k = 1)",
+    ),
+    "update_where": (
+        lambda be, spark, p, df: be.update_where(
+            spark, p, {"x": "'hit'"}, "k = 2", intervals={"k": (2, 2)}
+        )[0],
+        "update(k = 2)",
+    ),
+    "restore": (lambda be, spark, p, df: be.restore(p, 0), "restore(v0)"),
+    "add_columns": (
+        lambda be, spark, p, df: be.add_columns(spark, p, [("extra", "int")]),
+        "alter(add_column(extra int))",
+    ),
+    "drop_column": (
+        lambda be, spark, p, df: be.drop_column(p, "x"),
+        "alter(drop_column(x))",
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_every_commit_carries_table_metadata(spark, tmp_path, op):
+    """Whatever the op, a commit names its parent, rolls the txn
+    markers forward, keeps the table's stats columns, gives every
+    live file a row count and a bloom entry, and names itself in
+    the history."""
+    from pyspark.sql import functions as F
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 7 % 11).alias("u"),
+            F.lit("x").alias("x"),
+            F.lit(1).cast("long").alias("ts"),
+        )
+
+    path = str(tmp_path / "inv")
+    be = ManifestParquetBackend()
+    be.create(
+        rows(0, 40).repartitionByRange(2, "k"), path,
+        stats_cols=["k"], bloom_cols=["u"],
+    )
+    assert be.append(rows(40, 50), path, txn=("app", 0)) == 1
+    run, operation = _OPS[op]
+    assert run(be, spark, path, rows(45, 55)) == 2
+    man = be._manifest(path, 2)
+    assert man["parent"] == 1
+    assert man["txns"] == {"app": 0}
+    assert man["stats_cols"] == ["k"]
+    for f in man["files"]:
+        assert "_rows" in man["stats"][f]
+        assert "u" in man["bloom"]["files"][f]
+    assert be.history(path)[-1]["operation"] == operation
