@@ -9,6 +9,17 @@ skew detector; at production defaults the same mechanics engage at
 256 MB per partition. The salted_join/salted_agg operators
 (operators/skew.py, tests/test_scale_ops.py) remain the explicit
 fallback when a join shape AQE can't rewrite is skewed.
+
+The skew detector reads compressed shuffle bytes per reducer. The hot
+rows differ only in ``doc_id`` and compress well, so every map task
+adds one small compressed block to a hot reducer (about 180 bytes on
+top of ~6 KB of row data), and the hot partition's size grows with the
+number of input slices: its largest reducer holds ~7.0 KB at 4 slices
+and ~12 KB at 32, against the 8 KB threshold below. The slice count
+(``N_SLICES``) is therefore pinned, like
+``spark.sql.shuffle.partitions``, to the value the thresholds were set
+on; left to ``defaultParallelism`` it would follow the host's core
+count.
 """
 
 from __future__ import annotations
@@ -23,6 +34,8 @@ from dish_data_pipeline_spark.ops.dedup_fuzzy import (
 
 N_HOT = 200
 N_COLD = 60
+# input slices (map tasks) the SKEW_CONFS size thresholds were set on
+N_SLICES = 32
 
 SKEW_CONFS = {
     # force a shuffled join (no broadcast) and make the tiny hot
@@ -57,7 +70,7 @@ def _corpus(spark):
         )
         for i in range(N_COLD)
     ]
-    return spark.createDataFrame(rows)
+    return spark.createDataFrame(spark.sparkContext.parallelize(rows, N_SLICES))
 
 
 def test_hot_band_bucket_is_skew_split_and_pairs_exact(spark):
