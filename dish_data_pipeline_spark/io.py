@@ -17,12 +17,16 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import shutil
 import uuid
+from collections.abc import Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -38,31 +42,84 @@ TPCH_TABLES = (
 )
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark's vectorized
-    reader rejects those outright (PARQUET_TYPE_ILLEGAL)."""
+#: Footer key under which Spark stores the schema it wrote, as
+#: StructType JSON.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_file(path: str) -> str | None:
+    """The file whose footer Spark's schema inference reads for
+    ``path``: ``path`` itself, or the first data file in sorted order
+    of an unpartitioned local directory. None for a non-local URI, a
+    directory with subdirectories or summary files, or no data file."""
+    if "://" in path or path.startswith("file:"):
+        return None
+    if os.path.isfile(path):
+        return path
     try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
+        with os.scandir(path) as it:
+            entries = list(it)
+    except OSError:
+        return None
+    if any(
+        e.is_dir() or e.name in ("_metadata", "_common_metadata")
+        for e in entries
+    ):
+        return None
+    data = sorted(e.name for e in entries if not e.name.startswith(("_", ".")))
+    return os.path.join(path, data[0]) if data else None
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+
+def _footer_schema(path: str) -> tuple[StructType | None, list[str]]:
+    """(schema Spark stored in the footer, TIMESTAMP(NANOS) columns)
+    of the file :func:`_footer_file` picks, from one footer read by
+    pyarrow in this process; ``(None, [])`` when there is no such file or the
+    footer cannot be read or parsed. Spark's vectorized reader
+    rejects TIMESTAMP(NANOS) outright (PARQUET_TYPE_ILLEGAL)."""
+    f = _footer_file(path)
+    if f is None:
+        return None, []
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        # INT96 (Spark's default timestamp encoding) would otherwise
+        # surface as timestamp[ns] and pass for TIMESTAMP(NANOS)
+        with pq.ParquetFile(f, coerce_int96_timestamp_unit="us") as pf:
+            arrow = pf.schema_arrow
+    except (OSError, pa.ArrowException):
+        return None, []
+    ns_cols = [
+        c.name
+        for c in arrow
+        if pa.types.is_timestamp(c.type) and c.type.unit == "ns"
+    ]
+    stored = (arrow.metadata or {}).get(SPARK_SCHEMA_KEY)
+    try:
+        schema = StructType.fromJson(json.loads(stored)) if stored else None
+    except (ValueError, KeyError, TypeError):
+        schema = None
+    return schema, ns_cols
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with transparent TIMESTAMP(NANOS)
-    support: ns columns are read as raw longs
+def read_parquet(
+    spark: SparkSession, path: str, files: Sequence[str] = ()
+) -> DataFrame:
+    """Open the Parquet table at ``path`` (or only its ``files``).
+
+    A Spark-written local file or unpartitioned local directory opens
+    with the schema Spark stored in its footer, read by pyarrow, so
+    the open runs no schema-inference job; the result equals
+    ``spark.read.parquet(path)``'s. Anything else (pyarrow-written
+    files, partitioned directories, non-local URIs) is inferred.
+    TIMESTAMP(NANOS) columns are read as raw longs
     (``legacy.parquet.nanosAsLong``) and converted to microsecond
     timestamps (ns→µs floor — lossless for µs-grain data)."""
-    ns_cols = _nanos_timestamp_cols(path)
+    schema, ns_cols = _footer_schema(path)
+    paths = list(files) or [path]
     if not ns_cols:
-        return spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*paths)
     # The flag is consumed at schema resolution (inside .parquet()),
     # so it can be restored immediately after — later plain reads of
     # TIMESTAMP(NANOS) files in the same session are unaffected.
@@ -73,7 +130,7 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         prev = None
     spark.conf.set(conf_key, "true")
     try:
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(*paths)
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
@@ -309,20 +366,70 @@ def _swap_lock(base: str):
             os.remove(lock)
 
 
-def atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Overwrite ``path`` with ``df`` safely even when ``df`` reads
-    from ``path`` (the upsert read-modify-write cycle).
+def _data_names(base: str) -> set[str]:
+    """Names of the data files directly inside the directory ``base``
+    (not subdirectories, nor the ``_``/``.`` names Spark skips)."""
+    with os.scandir(base) as it:
+        return {
+            e.name
+            for e in it
+            if not e.is_dir() and not e.name.startswith(("_", "."))
+        }
+
+
+def _names_read(df: DataFrame, base: str) -> set[str]:
+    """Names of the files directly inside the local directory ``base``
+    that ``df``'s plan reads, from the listings Spark took when the
+    plan was built (``inputFiles``, no job)."""
+    root = os.path.realpath(base)
+    dirs: dict[str, bool] = {}
+    out = set()
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        if u.scheme not in ("", "file"):
+            continue
+        d, name = os.path.split(unquote(u.path))
+        if d not in dirs:
+            dirs[d] = os.path.realpath(d) == root
+        if dirs[d]:
+            out.add(name)
+    return out
+
+
+def atomic_overwrite(
+    df: DataFrame, path: str, carried: Sequence[str] = ()
+) -> None:
+    """Overwrite ``path`` with ``df`` — plus the ``carried`` data
+    files of the current table, kept byte for byte — safely even when
+    ``df`` reads from ``path`` (the upsert read-modify-write cycle).
 
     Plain ``mode("overwrite")`` on the source path would delete the
     files mid-read. Strategy: materialize to a temp sibling, then
     swap directories, all inside an advisory single-writer lock — a
     concurrent writer on the same target fails fast with
-    ``ConcurrentWriteError`` instead of silently losing an update
-    (the lazy plan's READ of the old target executes during the
-    write, so the whole read-modify-write cycle is inside the lock).
+    ``ConcurrentWriteError`` instead of silently losing an update.
+    The lazy plan's READ of the target runs during the write, inside
+    the lock, but its file listing was taken when ``df`` was built.
+    Carried files keep their names across swaps, so a stale listing
+    can still point at files that exist. Hence, under the lock, the
+    files ``df`` reads directly inside ``path`` plus ``carried`` must
+    be exactly the target's current data files (when there are any);
+    otherwise another writer swapped the target after ``df`` was
+    planned, and ``ConcurrentWriteError`` is raised before anything
+    is written.
+
+    ``carried`` names files directly inside ``path``. They are
+    hard-linked into the temp directory BEFORE Spark writes ``df``
+    into it with ``mode("append")``: Spark writes ``_SUCCESS`` only
+    when its job commits, and that marker is what
+    ``recover_interrupted_swap`` trusts, so a temp holding links but
+    no committed write is never promoted. A link needs the temp and
+    the target on one filesystem; when one fails, the carried files
+    are read back and rewritten with ``df`` (a whole-table rewrite).
+
     Crash-safety: every intermediate state is healable by
-    ``recover_interrupted_swap`` (the completed-write marker is
-    Spark's ``_SUCCESS``); a crashed writer's stale lock is stolen by
+    ``recover_interrupted_swap`` and leaves either the old table or
+    the complete new one; a crashed writer's stale lock is stolen by
     the next writer. For true multi-writer atomicity use the
     versioned manifest table (``io_backends.ManifestParquetBackend``,
     optimistic commits) — the operator composition in
@@ -331,10 +438,27 @@ def atomic_overwrite(df: DataFrame, path: str) -> None:
     """
     base = path.rstrip("/")
     with _swap_lock(base):
+        planned = _names_read(df, base) | set(carried)
+        if planned and os.path.isdir(base) and planned != _data_names(base):
+            raise ConcurrentWriteError(
+                f"target {base!r} was swapped by another writer after "
+                "this write was planned; re-read the target and retry"
+            )
         tmp = os.path.join(
             os.path.dirname(base), f".tmp-{uuid.uuid4().hex}-{os.path.basename(base)}"
         )
-        df.write.mode("overwrite").parquet(tmp)
+        mode = "overwrite"
+        if carried:
+            try:
+                os.makedirs(tmp)
+                for name in carried:
+                    os.link(os.path.join(base, name), os.path.join(tmp, name))
+                mode = "append"
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)
+                kept = [os.path.join(base, name) for name in carried]
+                df = df.unionByName(read_parquet(df.sparkSession, base, kept))
+        df.write.mode(mode).parquet(tmp)
         old = tmp + ".old"
         if os.path.exists(path):
             os.rename(path, old)

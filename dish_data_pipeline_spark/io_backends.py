@@ -14,7 +14,10 @@ each backend only decides how a target table is created, read, and
 merged into.
 
 - ``ParquetSwapBackend`` (default): the join-based MERGE + directory
-  swap. Works anywhere Spark can list files; single-writer scope is
+  swap. A MERGE rewrites only the files whose footer key range a
+  staged key can fall in and hard-links the rest into the new
+  directory (a whole-table rewrite where it cannot prune or link).
+  Works anywhere Spark can list files; single-writer scope is
   documented on io.atomic_overwrite.
 - ``ManifestParquetBackend``: pure-Parquet versioned-manifest table —
   immutable data files plus a ``_log/`` of JSON commit manifests,
@@ -44,7 +47,7 @@ from typing import Protocol
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from dish_data_pipeline_spark import io as dio
 from dish_data_pipeline_spark.operators.dedup import keep_latest
@@ -87,7 +90,13 @@ class ParquetSwapBackend:
     """Join-based MERGE on plain Parquet, finished by a directory
     swap. Catalyst broadcasts the (small) staging side, so the target
     is never shuffled; the swap is crash-safe but single-writer
-    (io.atomic_overwrite docstring)."""
+    (io.atomic_overwrite docstring).
+
+    A MERGE rewrites only the target files a staged key can match and
+    carries the others into the new directory by hard link
+    (:meth:`_split`): per-file key min/max from the Parquet footers,
+    read by pyarrow with no Spark job, pruned by the manifest tier's rule
+    (:func:`_prune`)."""
 
     name = "parquet"
 
@@ -114,7 +123,81 @@ class ParquetSwapBackend:
     ) -> None:
         target = self.read(spark, path)
         deduped = keep_latest(staging, keys, ts_col, tiebreakers)
-        dio.atomic_overwrite(upsert(target, deduped, keys), path)
+        carried, rewrite = self._split(spark, path, target, staging, keys)
+        if not carried:
+            new = upsert(target, deduped, keys)
+        elif rewrite:
+            new = upsert(dio.read_parquet(spark, path, rewrite), deduped, keys)
+        else:
+            new = deduped.select(*target.columns)
+        dio.atomic_overwrite(new, path, carried)
+
+    @staticmethod
+    def _split(
+        spark: SparkSession,
+        path: str,
+        target: DataFrame,
+        staging: DataFrame,
+        keys: Sequence[str],
+    ) -> tuple[list[str], list[str]]:
+        """(names of the target files the MERGE carries unchanged,
+        paths of the ones it rewrites); ``([], [])`` means a
+        whole-table rewrite.
+
+        No carried file holds a row whose keys can equal a staged
+        row's: its footer min/max lies outside the staged range of a
+        string or integer key, or every staged value of a key is null
+        (nulls never equi-join). The staged range costs one small
+        aggregate; the footers are read by pyarrow, with no job. At most
+        ``defaultParallelism`` files are carried, the largest, so the
+        file count stays bounded under insert-only feeds; the other
+        untouched files join the rewrite.
+
+        Nothing is carried when the staged column types differ from
+        the target's (a union would retype a column the carried files
+        keep), when the target is not a flat directory (a single file,
+        or partitioned), or when no key column can prune."""
+
+        def shape(df: DataFrame) -> list[tuple]:
+            return [(f.name, f.dataType) for f in df.schema.fields]
+
+        types = dict(shape(target))
+        cols = [
+            k for k in keys if isinstance(types.get(k), (StringType, IntegralType))
+        ]
+        if not cols or not os.path.isdir(path):
+            return [], []
+        with os.scandir(path) as it:
+            entries = list(it)
+        if (
+            any(e.is_dir() for e in entries)
+            or shape(staging.select(*target.columns)) != shape(target)
+        ):
+            return [], []
+        names = sorted(dio._data_names(path))
+        row = staging.agg(
+            *[F.min(k) for k in cols], *[F.max(k) for k in cols]
+        ).first()
+        if any(v is None for v in row[: len(cols)]):
+            affected = set()
+        else:
+            man = {
+                "files": names,
+                "stats": {
+                    n: _footer_min_max(os.path.join(path, n), cols) for n in names
+                },
+            }
+            bounds = zip(row[: len(cols)], row[len(cols):])
+            affected = set(_prune(man, dict(zip(cols, bounds))))
+        untouched = sorted(
+            (n for n in names if n not in affected),
+            key=lambda n: os.path.getsize(os.path.join(path, n)),
+            reverse=True,
+        )
+        carried = untouched[: spark.sparkContext.defaultParallelism]
+        if not carried:
+            return [], []
+        return carried, [os.path.join(path, n) for n in names if n not in carried]
 
 
 class CommitConflict(RuntimeError):
@@ -191,6 +274,77 @@ def _bloom_membership(entry: dict, h: int, coeffs) -> bool:
     return all((bitmap >> p) & 1 for p in positions)
 
 
+def _prune(
+    man: dict, intervals: dict[str, tuple], equals: dict | None = None
+) -> list[str]:
+    """The files of ``man`` (a manifest, or any dict with ``files``
+    and per-file ``stats`` in its shape) that may hold a row matching
+    every ``col: (lo, hi)`` interval and ``equals`` value — the rule
+    :meth:`ManifestParquetBackend.prune_files` documents. Both tiers
+    scope their rewrites with it."""
+    from dish_data_pipeline_spark.ops.portable import (
+        perm_coeffs,
+        py_phash,
+    )
+
+    stats = man.get("stats", {})
+    bloom = man.get("bloom") or {}
+    bloom_files = bloom.get("files", {})
+    coeffs = (
+        perm_coeffs(bloom["k"], bloom["seed"]) if bloom else []
+    )
+    bloom_cols = set(bloom.get("cols") or [])
+    for col, val in (equals or {}).items():
+        # the filters hashed Spark's CAST(col AS STRING); Python's
+        # str() agrees only for int/str (bool → 'True' vs 'true',
+        # float/Decimal formatting drifts) — anything else would
+        # hash differently and SILENTLY drop matching files, so
+        # fail loudly instead. Only enforced for columns the table
+        # actually bloom-indexed: a non-indexed column is never
+        # hashed, so any value type is a sound keep-all no-op
+        # (back-compat with bloom-less tables).
+        if col in bloom_cols and (
+            isinstance(val, bool) or not isinstance(val, (int, str))
+        ):
+            raise TypeError(
+                f"equals[{col!r}] must be int or str (got "
+                f"{type(val).__name__}); other types don't share "
+                "Spark's string cast and would prune unsoundly"
+            )
+    hashes = {
+        col: py_phash(str(val))
+        for col, val in (equals or {}).items()
+        if col in bloom_cols
+    }
+    kept = []
+    for f in man["files"]:
+        fstats = stats.get(f, {})
+        ok = True
+        for col, (lo, hi) in intervals.items():
+            mm = fstats.get(col)
+            # shape guard: a column literally named "_rows" would
+            # collide with the per-file row-count stat (an int,
+            # not a [min, max]); absence-of-stats semantics apply
+            if mm is None or not isinstance(mm, (list, tuple)):
+                continue
+            if (lo is not None and mm[1] < lo) or (
+                hi is not None and mm[0] > hi
+            ):
+                ok = False
+                break
+        if ok:
+            for col, h in hashes.items():
+                entry = bloom_files.get(f, {}).get(col)
+                if entry is not None and not _bloom_membership(
+                    entry, h, coeffs
+                ):
+                    ok = False
+                    break
+        if ok:
+            kept.append(f)
+    return kept
+
+
 class ManifestParquetBackend:
     """Versioned-manifest Parquet table with optimistic concurrency.
 
@@ -229,11 +383,12 @@ class ManifestParquetBackend:
       raise :class:`CommitConflict` (re-examine state before retrying:
       the rival may have been another restore or ALTER).
 
-    Scale shape: every MERGE rewrites the full table (same as
-    ParquetSwapBackend); DELETE and UPDATE share one file-scoped
-    rewrite that touches only the files :meth:`prune_files` keeps.
-    What this tier adds over the directory swap is *multi-writer
-    safety and snapshot reads*, not rewrite avoidance on MERGE.
+    Scale shape: every MERGE rewrites the full table (the directory
+    swap's MERGE is file-scoped instead); DELETE and UPDATE share one
+    file-scoped rewrite that touches only the files
+    :meth:`prune_files` keeps. What this tier adds over the directory
+    swap is *multi-writer safety and snapshot reads*, not rewrite
+    avoidance.
     """
 
     name = "manifest"
@@ -884,7 +1039,7 @@ class ManifestParquetBackend:
 
         def change(man):
             rows = rows_for(self._schema(man))
-            affected = self._prune(man, intervals or {}, equals)
+            affected = _prune(man, intervals or {}, equals)
             gone = set(affected)
             carried = [f for f in man["files"] if f not in gone]
             written = (
@@ -1043,74 +1198,7 @@ class ManifestParquetBackend:
         a sound keep-all no-op regardless of value type. Returns
         (kept relative files, total files)."""
         man = self._load(path, version)
-        return self._prune(man, intervals, equals), len(man["files"])
-
-    @staticmethod
-    def _prune(
-        man: dict, intervals: dict[str, tuple], equals: dict | None = None
-    ) -> list[str]:
-        """:meth:`prune_files` over an already-read manifest."""
-        from dish_data_pipeline_spark.ops.portable import (
-            perm_coeffs,
-            py_phash,
-        )
-
-        stats = man.get("stats", {})
-        bloom = man.get("bloom") or {}
-        bloom_files = bloom.get("files", {})
-        coeffs = (
-            perm_coeffs(bloom["k"], bloom["seed"]) if bloom else []
-        )
-        bloom_cols = set(bloom.get("cols") or [])
-        for col, val in (equals or {}).items():
-            # the builder hashed Spark's CAST(col AS STRING); Python's
-            # str() agrees only for int/str (bool → 'True' vs 'true',
-            # float/Decimal formatting drifts) — anything else would
-            # hash differently and SILENTLY drop matching files, so
-            # fail loudly instead. Only enforced for columns the table
-            # actually bloom-indexed: a non-indexed column is never
-            # hashed, so any value type is a sound keep-all no-op
-            # (back-compat with bloom-less tables).
-            if col in bloom_cols and (
-                isinstance(val, bool) or not isinstance(val, (int, str))
-            ):
-                raise TypeError(
-                    f"equals[{col!r}] must be int or str (got "
-                    f"{type(val).__name__}); other types don't share "
-                    "Spark's string cast and would prune unsoundly"
-                )
-        hashes = {
-            col: py_phash(str(val))
-            for col, val in (equals or {}).items()
-            if col in bloom_cols
-        }
-        kept = []
-        for f in man["files"]:
-            fstats = stats.get(f, {})
-            ok = True
-            for col, (lo, hi) in intervals.items():
-                mm = fstats.get(col)
-                # shape guard: a column literally named "_rows" would
-                # collide with the per-file row-count stat (an int,
-                # not a [min, max]); absence-of-stats semantics apply
-                if mm is None or not isinstance(mm, (list, tuple)):
-                    continue
-                if (lo is not None and mm[1] < lo) or (
-                    hi is not None and mm[0] > hi
-                ):
-                    ok = False
-                    break
-            if ok:
-                for col, h in hashes.items():
-                    entry = bloom_files.get(f, {}).get(col)
-                    if entry is not None and not _bloom_membership(
-                        entry, h, coeffs
-                    ):
-                        ok = False
-                        break
-            if ok:
-                kept.append(f)
-        return kept
+        return _prune(man, intervals, equals), len(man["files"])
 
     def scan(
         self,
@@ -1127,7 +1215,7 @@ class ManifestParquetBackend:
         also be present — apply the exact predicate on top, as any
         data-skipping reader does."""
         man = self._load(path, version)
-        return self._open(spark, path, man, self._prune(man, intervals, equals))
+        return self._open(spark, path, man, _prune(man, intervals, equals))
 
     def count_rows(self, path: str, version: int | None = None) -> int | None:
         """Metadata-only ``COUNT(*)``: sum of the per-file row counts

@@ -84,6 +84,7 @@ def run_data_quality_checks(
     table_name: str,
     policies: dict[str, dict] | None = None,
     min_rows: int = MIN_ROWS,
+    metrics: dict | None = None,
 ) -> tuple[bool, list[str]]:
     """Q1-Q5 with reference-compatible issue strings.
 
@@ -92,6 +93,10 @@ def run_data_quality_checks(
     "duplicate"); Q5 low volume → fatal. (Failure routing itself
     lives in the caller, as in reference main(),
     pipeline/data_pipeline.py:251-262.)
+
+    ``metrics``, when given, receives the :func:`dq_metrics` row
+    (``row_count``, ``null_<col>``, ``dup_rows``), so a caller can
+    count the rows it stages without another job.
     """
     policy = (policies or DEFAULT_POLICIES).get(table_name, {})
     required = policy.get("required", [])
@@ -104,6 +109,8 @@ def run_data_quality_checks(
         issues.append(f"Missing required columns: {missing}")
 
     row = dq_metrics(df, required, keys).collect()[0]
+    if metrics is not None:
+        metrics.update(row.asDict())
 
     if row["row_count"] == 0:  # Q1
         issues.append("DataFrame is empty")

@@ -91,7 +91,7 @@ def stage_dq_check(ctx: StageContext) -> bool:
     """Task 3 (SHORT-CIRCUIT): DQ gate. Fatal issues → audit FAILED
     and return False (downstream compute stages are skipped);
     recoverable duplicates → dedup and continue (DAG:89-101)."""
-    df, ctx.xcom["issues"] = dq_gate(ctx.xcom["df"], ctx.feed)
+    df, ctx.xcom["issues"], ctx.xcom["count"] = dq_gate(ctx.xcom["df"], ctx.feed)
     if df is None:
         ctx.xcom["status"] = f"FAILED: {', '.join(ctx.xcom['issues'])}"
         _write_audit(ctx, 0, ctx.xcom["status"])
@@ -105,9 +105,7 @@ def stage_load_staging(ctx: StageContext) -> bool:
     (DAG:103-109)."""
     staging = ctx.path(f"staging_{ctx.feed.name}")
     dio.write_staging(ctx.xcom["df"], staging)
-    staged = ctx.spark.read.parquet(staging)
-    ctx.xcom["staged"] = staged
-    ctx.xcom["count"] = staged.count()
+    ctx.xcom["staged"] = dio.read_parquet(ctx.spark, staging)
     return True
 
 

@@ -97,11 +97,15 @@ def build_feed_frame(
     return dedup_keyed(df, None)
 
 
-def dq_gate(df: DataFrame, feed: FeedConfig) -> tuple[DataFrame | None, list[str]]:
-    """The DQ gate → (frame to stage, issues). The frame is None when
-    an issue is fatal; recoverable duplicates are deduped by the feed
-    keys and the run continues (reference
-    pipeline/data_pipeline.py:253-258)."""
+def dq_gate(
+    df: DataFrame, feed: FeedConfig
+) -> tuple[DataFrame | None, list[str], int]:
+    """The DQ gate → (frame to stage, issues, its row count). The
+    frame is None when an issue is fatal; recoverable duplicates are
+    deduped by the feed keys and the run continues (reference
+    pipeline/data_pipeline.py:253-258). The count comes from the DQ
+    metrics row: ``row_count``, less ``dup_rows`` (rows beyond the
+    first per key) when the frame is deduped."""
     # Feed-specific config wins over the built-in defaults — a feed
     # named like a default (daily_visits/ga_sessions) must be gated
     # on ITS OWN required/keys, matching the dedup path.
@@ -109,12 +113,16 @@ def dq_gate(df: DataFrame, feed: FeedConfig) -> tuple[DataFrame | None, list[str
         **DEFAULT_POLICIES,
         feed.name: {"required": feed.required, "keys": feed.keys},
     }
-    passed, issues = run_data_quality_checks(df, feed.name, policies)
+    metrics: dict = {}
+    passed, issues = run_data_quality_checks(
+        df, feed.name, policies, metrics=metrics
+    )
     if passed:
-        return df, issues
+        return df, issues, metrics["row_count"]
     if any(not is_recoverable(i) for i in issues):
-        return None, issues
-    return dedup_keyed(df, feed.keys), issues
+        return None, issues, 0
+    count = metrics["row_count"] - metrics["dup_rows"]
+    return dedup_keyed(df, feed.keys), issues, count
 
 
 def land_staged(
@@ -171,28 +179,24 @@ def run_feed(
     source_files: list[str] = []
     try:
         records, source_files = extract_feed(feed, base_url, warehouse_dir, http_get)
-        # Compute the feed relation ONCE: the DQ gate's aggregate,
-        # the staging write and the audited count all consume the
-        # same extract→normalize→dedup plan, which previously
-        # re-executed per action (driver re-serialization of the
-        # fetched records plus the dedup window shuffle, 2-3×).
-        # The cache is feed-sized (the reference ingests ~3k
-        # rows/run) and released in the finally below.
+        # Compute the feed relation ONCE: the DQ gate's aggregate
+        # and the staging write both consume the same
+        # extract→normalize→dedup plan, which would otherwise
+        # re-execute per action (re-serializing the fetched records
+        # plus the dedup shuffle). The cache is
+        # feed-sized (the reference ingests ~3k rows/run) and
+        # released in the finally below.
         cached = build_feed_frame(spark, feed, records, load_date).persist()
         try:
-            df, issues = dq_gate(cached, feed)
+            df, issues, count = dq_gate(cached, feed)
             if df is None:
                 status = f"FAILED: {', '.join(issues)}"
                 write_audit(spark, feed, warehouse_dir, 0, status, source_files)
                 return PipelineResult(feed.name, "FAILED", 0, issues)
             dio.write_staging(df, staging_path)
-            # Audited count = the staged row count; counting the
-            # (cached) relation just written avoids re-listing and
-            # re-scanning the parquet it produced.
-            count = df.count()
         finally:
             cached.unpersist()
-        staged = spark.read.parquet(staging_path)
+        staged = dio.read_parquet(spark, staging_path)
         land_staged(spark, backend, feed, warehouse_dir, staged)
         write_audit(spark, feed, warehouse_dir, count, "SUCCESS", source_files)
         return PipelineResult(feed.name, "SUCCESS", count, issues)

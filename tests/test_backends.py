@@ -234,6 +234,227 @@ def test_rollback_when_only_old_snapshot_survives(spark, tmp_path):
     assert sorted(map(tuple, be.read(spark, path).collect())) == [("a", 1, 1)]
 
 
+# --- file-scoped MERGE on the swap target --------------------------
+# A MERGE rewrites only the files whose footer key range a staged key
+# can fall in; the others are hard-linked into the new directory.
+
+
+def _clustered(spark, path):
+    """A swap target of 400 rows in ``min(4, defaultParallelism)``
+    files, each holding one contiguous range of the string key ``k``;
+    returns a copy of its rows that does not read ``path``."""
+    n_files = min(4, spark.sparkContext.defaultParallelism)
+    df = spark.range(0, 400, 1, n_files).selectExpr(
+        "format_string('k%04d', id) AS k", "id AS v", "0L AS ts"
+    )
+    ParquetSwapBackend().create(df, path)
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _inodes(path):
+    """Data file name → inode of the table at ``path``."""
+    import os as _os
+
+    return {
+        e.name: e.inode()
+        for e in _os.scandir(path)
+        if not e.name.startswith(("_", "."))
+    }
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.select("k", "v", "ts").collect()), key=repr)
+
+
+def _updates_and_inserts(spark):
+    """Updates of keys in the last file (one with a stale duplicate)
+    plus keys beyond the target's range."""
+    return spark.createDataFrame(
+        [Row(k=f"k{i:04d}", v=-i, ts=1) for i in (390, 395, 399, 400, 401)]
+        + [Row(k="k0395", v=0, ts=0)],
+        "k string, v bigint, ts bigint",
+    )
+
+
+def test_file_scoped_merge_carries_untouched_files(spark, tmp_path):
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    before = _clustered(spark, path)
+    old = _inodes(path)
+    last = max(old, key=lambda n: _key_max(path, n))  # holds k0399
+    stg = _updates_and_inserts(spark)
+    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(
+        upsert_keep_latest(before, stg, ["k"], "ts")
+    )
+    new = _inodes(path)
+    carried = {n for n, ino in new.items() if old.get(n) == ino}
+    assert carried == set(old) - {last}  # linked, not rewritten
+    assert last not in new
+
+
+def _key_max(path, name):
+    import os as _os
+
+    from dish_data_pipeline_spark.io_backends import _footer_min_max
+
+    return _footer_min_max(_os.path.join(path, name), ["k"])["k"][1]
+
+
+@pytest.mark.parametrize("fault", ["type_drift", "link_fails"])
+def test_file_scoped_merge_falls_back_to_whole_rewrite(
+    spark, tmp_path, monkeypatch, fault
+):
+    """A batch whose column types differ from the target's, or a
+    filesystem that refuses hard links, gets the whole-table rewrite:
+    today's result, no file carried, no temp left behind."""
+    import os as _os
+
+    from dish_data_pipeline_spark import io as dio
+
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    before = _clustered(spark, path)
+    old = _inodes(path)
+    stg = _updates_and_inserts(spark)
+    if fault == "type_drift":
+        stg = stg.selectExpr("k", "CAST(v AS string) AS v", "ts")
+    else:
+        def no_link(src, dst):
+            raise OSError(18, "Invalid cross-device link")
+
+        monkeypatch.setattr(dio.os, "link", no_link)
+    want = upsert_keep_latest(before, stg, ["k"], "ts")
+    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+    monkeypatch.undo()
+
+    got = be.read(spark, path)
+    assert got.schema == want.schema
+    assert _sorted_rows(got) == _sorted_rows(want)
+    assert not set(_inodes(path).values()) & set(old.values())
+    assert not [d for d in _os.listdir(tmp_path) if d.startswith(".tmp-")]
+
+
+def test_null_staged_keys_insert_and_carry_every_file(spark, tmp_path):
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    before = _clustered(spark, path)
+    old = _inodes(path)
+    stg = spark.createDataFrame(
+        [Row(k=None, v=7, ts=1)], "k string, v bigint, ts bigint"
+    )
+    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(
+        upsert_keep_latest(before, stg, ["k"], "ts")
+    )
+    new = _inodes(path)
+    assert {n: new[n] for n in old} == old  # all carried
+    assert len(new) > len(old)  # plus the inserted row's file
+
+
+def test_crash_after_links_before_commit_leaves_old_target(
+    spark, tmp_path, monkeypatch
+):
+    """The carried links go into the temp directory before Spark
+    writes there; a writer dying before its job commits leaves a temp
+    without ``_SUCCESS``, which recovery discards."""
+    import os as _os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from dish_data_pipeline_spark import io as dio
+
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    before = _clustered(spark, path)
+    old = _inodes(path)
+    stg = _updates_and_inserts(spark)
+
+    def crash(self, out, *a, **kw):
+        raise RuntimeError("simulated crash before the write commits")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+    monkeypatch.undo()
+
+    (tmp,) = [d for d in _os.listdir(tmp_path) if d.startswith(".tmp-")]
+    linked = _inodes(str(tmp_path / tmp))
+    assert linked and set(linked.values()) < set(old.values())
+    assert not _os.path.exists(tmp_path / tmp / "_SUCCESS")
+    assert _inodes(path) == old
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(before)
+
+    assert dio.recover_interrupted_swap(path) == "cleaned"
+    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(
+        upsert_keep_latest(before, stg, ["k"], "ts")
+    )
+
+
+@pytest.mark.parametrize("batch", ["insert_only", "every_file"])
+def test_merge_planned_before_another_swap_raises(
+    spark, tmp_path, monkeypatch, batch
+):
+    """Another writer's insert-only MERGE, which carries every file,
+    swaps the target after this MERGE listed it and before it takes
+    the lock. Every file the stale plan names still exists, so only
+    the listing check under the lock keeps the other writer's row:
+    this MERGE raises and writes nothing, on the carrying path and on
+    the whole-table rewrite."""
+    from dish_data_pipeline_spark import io as dio
+
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    before = _clustered(spark, path)
+    old = _inodes(path)
+    schema = "k string, v bigint, ts bigint"
+    other = spark.createDataFrame([Row(k="z1", v=1, ts=1)], schema)
+    keys = ["z2"] if batch == "insert_only" else ["k0000", "k0399"]
+    stg = spark.createDataFrame([Row(k=k, v=2, ts=1) for k in keys], schema)
+    split = ParquetSwapBackend._split
+
+    def racing_split(*args):
+        out = split(*args)
+        monkeypatch.setattr(ParquetSwapBackend, "_split", staticmethod(split))
+        be.merge_keep_latest(spark, path, other, ["k"], "ts")
+        return out
+
+    monkeypatch.setattr(
+        ParquetSwapBackend, "_split", staticmethod(racing_split)
+    )
+    with pytest.raises(dio.ConcurrentWriteError, match="swapped"):
+        be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+
+    assert set(old.items()) < set(_inodes(path).items())  # all carried
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(
+        upsert_keep_latest(before, other, ["k"], "ts")
+    )
+
+
+def test_insert_only_merges_carry_at_most_parallelism_files(spark, tmp_path):
+    """Insert-only batches touch no file, so without a bound every
+    MERGE would add files; the largest ``defaultParallelism`` are
+    carried and the rest are rewritten with the batch."""
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    rows = _sorted_rows(_clustered(spark, path))
+    par = spark.sparkContext.defaultParallelism
+    for i in range(3 * par):
+        batch = [Row(k=f"n{i:03d}{j}", v=i, ts=1) for j in range(3)]
+        old = _inodes(path)
+        be.merge_keep_latest(
+            spark, path, spark.createDataFrame(batch), ["k"], "ts"
+        )
+        new = _inodes(path)
+        assert len({n for n, ino in new.items() if old.get(n) == ino}) <= par
+        assert len(new) <= 3 * par
+        rows = sorted(rows + [tuple(r) for r in batch], key=repr)
+        assert _sorted_rows(be.read(spark, path)) == rows
+
+
 # --- ManifestParquetBackend (the executable transactional tier) ----
 
 def _rows(be, spark, path, version=None):

@@ -143,3 +143,38 @@ def test_avro_two_tier(spark, tmp_path):
         files = os.listdir(path)
         assert any(f.endswith(".avro") for f in files)
         assert "_avro_schema.avsc" in files
+
+
+def test_spark_written_parquet_opens_with_footer_schema(spark, tmp_path):
+    """A Spark-written file or unpartitioned directory opens with the
+    schema in its footer: the same schema inference would give, and
+    no Spark job. A partitioned directory is still inferred, with its
+    partition columns."""
+    from tests.test_job_budgets import spark_jobs
+
+    d = str(tmp_path / "typed")
+    spark.sql(
+        """SELECT id, CAST(id AS int) AS i,
+                  TIMESTAMP'2024-01-01 10:00:00' AS ts,
+                  TIMESTAMP_NTZ'2024-01-01 10:00:00' AS ts_ntz,
+                  DATE'2024-01-01' AS d, CAST(id AS decimal(12, 3)) AS dec,
+                  array(id, id) AS arr, named_struct('a', id, 'b', 'x') AS st,
+                  map('k', id) AS m, CAST('ab' AS char(5)) AS c,
+                  CAST('ab' AS varchar(7)) AS vc
+           FROM range(10)"""
+    ).write.parquet(d)
+    first = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))[0]
+    one = os.path.join(d, first)
+    for p in (d, one):
+        df, jobs = spark_jobs(spark, lambda: dio.read_parquet(spark, p))
+        assert df.schema == spark.read.parquet(p).schema
+        assert jobs == 0
+    assert dio.read_parquet(spark, d).count() == 10
+
+    parted = str(tmp_path / "parted")
+    spark.range(6).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(
+        parted
+    )
+    df = dio.read_parquet(spark, parted)
+    assert df.columns == ["id", "p"]
+    assert df.schema == spark.read.parquet(parted).schema
