@@ -26,7 +26,24 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TPCH_TABLES = (
     "region",
@@ -47,37 +64,133 @@ TPCH_TABLES = (
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_file(path: str) -> str | None:
-    """The file whose footer Spark's schema inference reads for
-    ``path``: ``path`` itself, or the first data file in sorted order
-    of an unpartitioned local directory. None for a non-local URI, a
-    directory with subdirectories or summary files, or no data file."""
+def _footer_files(path: str) -> list[str]:
+    """The files Spark's schema inference may read for ``path``, in
+    sorted order: ``path`` itself, or the data files of an
+    unpartitioned local directory (inference reads the first unless
+    ``spark.sql.parquet.mergeSchema`` is on). Empty for a non-local
+    URI, a directory with subdirectories or summary files, or no data
+    file."""
     if "://" in path or path.startswith("file:"):
-        return None
+        return []
     if os.path.isfile(path):
-        return path
+        return [path]
     try:
         with os.scandir(path) as it:
             entries = list(it)
     except OSError:
-        return None
+        return []
     if any(
         e.is_dir() or e.name in ("_metadata", "_common_metadata")
         for e in entries
     ):
-        return None
+        return []
     data = sorted(e.name for e in entries if not e.name.startswith(("_", ".")))
-    return os.path.join(path, data[0]) if data else None
+    return [os.path.join(path, name) for name in data]
 
 
-def _footer_schema(path: str) -> tuple[StructType | None, list[str]]:
-    """(schema Spark stored in the footer, TIMESTAMP(NANOS) columns)
-    of the file :func:`_footer_file` picks, from one footer read by
-    pyarrow in this process; ``(None, [])`` when there is no such file or the
-    footer cannot be read or parsed. Spark's vectorized reader
-    rejects TIMESTAMP(NANOS) outright (PARQUET_TYPE_ILLEGAL)."""
-    f = _footer_file(path)
-    if f is None:
+#: Spark type of a top-level Parquet column with no logical
+#: annotation, by physical type (BYTE_ARRAY depends on a conf, and
+#: INT96/FIXED_LEN_BYTE_ARRAY are left to inference).
+_PLAIN_TYPES = {
+    "BOOLEAN": BooleanType(),
+    "INT32": IntegerType(),
+    "INT64": LongType(),
+    "FLOAT": FloatType(),
+    "DOUBLE": DoubleType(),
+}
+
+#: Signed Int(bitWidth) annotations by (physical type, bit width).
+_INT_TYPES = {
+    ("INT32", 8): ByteType(),
+    ("INT32", 16): ShortType(),
+    ("INT32", 32): IntegerType(),
+    ("INT64", 64): LongType(),
+}
+
+
+def _conf_on(spark: SparkSession, key: str, default: str) -> bool:
+    return spark.conf.get(key, default).strip().lower() == "true"
+
+
+def _column_type(spark: SparkSession, col) -> DataType | None:
+    """The type Spark's schema inference gives the Parquet column
+    ``col`` (a pyarrow ``ColumnSchema``), from its physical type and
+    logical annotation; None for anything outside this closed mapping
+    (nested or repeated columns, unsigned ints, INT96, TIME,
+    TIMESTAMP(NANOS), non-decimal FIXED_LEN_BYTE_ARRAY, UUID, JSON,
+    intervals, ...), which is left to inference."""
+    if col.max_repetition_level or col.path != col.name:
+        return None  # a leaf of a nested or repeated column
+    phys, logical = col.physical_type, col.logical_type
+    kind = logical.type
+    if kind == "NONE":
+        if phys == "BYTE_ARRAY":
+            text = _conf_on(spark, "spark.sql.parquet.binaryAsString", "false")
+            return StringType() if text else BinaryType()
+        return _PLAIN_TYPES.get(phys)
+    if kind == "STRING":
+        return StringType() if phys == "BYTE_ARRAY" else None
+    if kind == "DATE":
+        return DateType() if phys == "INT32" else None
+    if kind == "DECIMAL":
+        # the widest precision Spark accepts for the physical type (a
+        # fixed-length decimal: the digits its signed bytes can hold)
+        top = {"INT32": 9, "INT64": 18, "BYTE_ARRAY": 38}.get(phys)
+        if phys == "FIXED_LEN_BYTE_ARRAY":
+            top = min(38, len(str(2 ** (8 * col.length - 1) - 1)) - 1)
+        p, s = col.precision, col.scale
+        if top is None or not (1 <= p <= top and 0 <= s <= p):
+            return None
+        return DecimalType(p, s)
+    meta = json.loads(logical.to_json())
+    if kind == "INT":
+        return _INT_TYPES.get((phys, meta["bitWidth"])) if meta["isSigned"] else None
+    if kind == "TIMESTAMP" and phys == "INT64":
+        if meta["timeUnit"] not in ("milliseconds", "microseconds"):
+            return None
+        if meta["isAdjustedToUTC"] or not _conf_on(
+            spark, "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+        ):
+            return TimestampType()
+        return TimestampNTZType()
+    return None
+
+
+def _derived_schema(spark: SparkSession, columns) -> StructType | None:
+    """The schema Spark's inference gives a Parquet file with no Spark
+    schema in its footer, built from its column descriptors; None when
+    a column is outside :func:`_column_type`'s mapping or two names
+    collide case-insensitively. Every field is nullable, as Spark
+    makes inferred file schemas."""
+    names = [c.name for c in columns]
+    if len({n.lower() for n in names}) != len(names):
+        return None
+    fields = []
+    for c in columns:
+        t = _column_type(spark, c)
+        if t is None:
+            return None
+        fields.append(StructField(c.name, t, True))
+    return StructType(fields)
+
+
+def _footer_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType | None, list[str]]:
+    """(schema Spark's inference would give, TIMESTAMP(NANOS) columns)
+    of the first of :func:`_footer_files`, from one footer read by
+    pyarrow in this process. The schema is the one Spark stored in the
+    footer; for a file with none (pyarrow-written, say) it is derived
+    from the Parquet column descriptors by :func:`_derived_schema`.
+    ``(None, [])`` when there is no such file or the footer cannot be
+    read; the schema is None when it cannot be derived, when the file
+    has TIMESTAMP(NANOS) columns (which Spark's vectorized reader
+    rejects outright, PARQUET_TYPE_ILLEGAL), or when
+    ``spark.sql.parquet.mergeSchema`` has inference merge the schemas
+    of several files."""
+    files = _footer_files(path)
+    if not files:
         return None, []
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -85,8 +198,10 @@ def _footer_schema(path: str) -> tuple[StructType | None, list[str]]:
     try:
         # INT96 (Spark's default timestamp encoding) would otherwise
         # surface as timestamp[ns] and pass for TIMESTAMP(NANOS)
-        with pq.ParquetFile(f, coerce_int96_timestamp_unit="us") as pf:
+        with pq.ParquetFile(files[0], coerce_int96_timestamp_unit="us") as pf:
             arrow = pf.schema_arrow
+            descr = pf.schema
+            columns = [descr.column(i) for i in range(len(descr))]
     except (OSError, pa.ArrowException):
         return None, []
     ns_cols = [
@@ -94,12 +209,15 @@ def _footer_schema(path: str) -> tuple[StructType | None, list[str]]:
         for c in arrow
         if pa.types.is_timestamp(c.type) and c.type.unit == "ns"
     ]
+    if len(files) > 1 and _conf_on(spark, "spark.sql.parquet.mergeSchema", "false"):
+        return None, ns_cols
     stored = (arrow.metadata or {}).get(SPARK_SCHEMA_KEY)
+    if stored is None:
+        return (None if ns_cols else _derived_schema(spark, columns)), ns_cols
     try:
-        schema = StructType.fromJson(json.loads(stored)) if stored else None
+        return StructType.fromJson(json.loads(stored)), ns_cols
     except (ValueError, KeyError, TypeError):
-        schema = None
-    return schema, ns_cols
+        return None, ns_cols
 
 
 def read_parquet(
@@ -107,15 +225,17 @@ def read_parquet(
 ) -> DataFrame:
     """Open the Parquet table at ``path`` (or only its ``files``).
 
-    A Spark-written local file or unpartitioned local directory opens
-    with the schema Spark stored in its footer, read by pyarrow, so
-    the open runs no schema-inference job; the result equals
-    ``spark.read.parquet(path)``'s. Anything else (pyarrow-written
-    files, partitioned directories, non-local URIs) is inferred.
-    TIMESTAMP(NANOS) columns are read as raw longs
+    A local file or unpartitioned local directory opens with the
+    schema :func:`_footer_schema` reads from its footer with pyarrow:
+    the schema Spark stored there, or for a file without one (written
+    by pyarrow, say) the schema derived from its column descriptors.
+    So the open runs no schema-inference job, and the result equals
+    ``spark.read.parquet(path)``'s. Anything else (partitioned
+    directories, non-local URIs, nested, unsigned or INT96 columns)
+    is inferred. TIMESTAMP(NANOS) columns are read as raw longs
     (``legacy.parquet.nanosAsLong``) and converted to microsecond
     timestamps (ns→µs floor — lossless for µs-grain data)."""
-    schema, ns_cols = _footer_schema(path)
+    schema, ns_cols = _footer_schema(spark, path)
     paths = list(files) or [path]
     if not ns_cols:
         reader = spark.read if schema is None else spark.read.schema(schema)

@@ -494,9 +494,11 @@ class ManifestParquetBackend:
         path: str,
         rel_files: Sequence[str],
         cfg: dict,
+        schema: StructType,
     ) -> dict:
         """Per-file bloom filters for ``cfg['cols']`` over freshly
-        written parquet files — the equality-predicate half of data
+        written parquet files of ``schema`` (read with it, so no
+        schema-inference job runs) — the equality-predicate half of data
         skipping (footer min/max prunes ranges; a point lookup on an
         UNCLUSTERED column overlaps every file's [min,max], and only
         a bloom can prove absence). One distributed aggregate per
@@ -543,7 +545,9 @@ class ManifestParquetBackend:
             F.element_at(F.split(F.input_file_name(), "/"), -2),
             F.element_at(F.split(F.input_file_name(), "/"), -1),
         )
-        raw = spark.read.parquet(*[os.path.join(path, f) for f in rel_files])
+        raw = spark.read.schema(schema).parquet(
+            *[os.path.join(path, f) for f in rel_files]
+        )
         # a mergeSchema append may write files LACKING a bloom column
         # entirely — those files hold only NULLs for it, and a bloom
         # never indexes NULL, so the correct entry is an EMPTY filter
@@ -615,7 +619,7 @@ class ManifestParquetBackend:
         )
         cfg = man.get("bloom")
         blooms = (
-            self._bloom_for_files(df.sparkSession, path, files, cfg)
+            self._bloom_for_files(df.sparkSession, path, files, cfg, df.schema)
             if cfg and files
             else {}
         )

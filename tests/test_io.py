@@ -178,3 +178,115 @@ def test_spark_written_parquet_opens_with_footer_schema(spark, tmp_path):
     df = dio.read_parquet(spark, parted)
     assert df.columns == ["id", "p"]
     assert df.schema == spark.read.parquet(parted).schema
+
+
+def _outcome(fn):
+    """The schema ``fn()`` opens with, or the error condition it
+    raises (a case-colliding file fails the same way on both paths)."""
+    try:
+        return fn().schema
+    except Exception as e:  # noqa: BLE001 - compared, not handled
+        return getattr(e, "getCondition", lambda: type(e).__name__)()
+
+
+def test_pyarrow_written_parquet_opens_with_footer_schema(spark, tmp_path):
+    """A pyarrow-written file or unpartitioned directory (no Spark
+    schema in its footer) opens with the schema derived from its
+    Parquet column descriptors: the one inference gives, and no Spark
+    job. Columns outside the mapping are inferred as before, and both
+    hold again with ``inferTimestampNTZ``, ``binaryAsString``,
+    ``caseSensitive`` and ``mergeSchema`` flipped in the session."""
+    import datetime as dt
+    import decimal
+
+    from tests.test_job_budgets import spark_jobs
+
+    ts = [dt.datetime(2024, 1, 1, 10, 0, 0, 123000), None]
+    dec = decimal.Decimal("1.23")
+    mapped = {
+        "boolean": pa.array([True, None]),
+        "int8": pa.array([1, None], pa.int8()),
+        "int16": pa.array([1, None], pa.int16()),
+        "int32": pa.array([1, None], pa.int32()),
+        "int64": pa.array([1, None], pa.int64()),
+        "float": pa.array([1.5, None], pa.float32()),
+        "double": pa.array([1.5, None], pa.float64()),
+        "string": pa.array(["a", None]),
+        "large_string": pa.array(["a", None], pa.large_string()),
+        "dictionary": pa.array(["a", None]).dictionary_encode(),
+        "binary": pa.array([b"a", None]),
+        "date32": pa.array([dt.date(2024, 1, 1), None], pa.date32()),
+        "ts_s": pa.array(ts, pa.timestamp("s")),
+        "ts_ms": pa.array(ts, pa.timestamp("ms")),
+        "ts_us": pa.array(ts, pa.timestamp("us")),
+        "ts_ms_tz": pa.array(ts, pa.timestamp("ms", "UTC")),
+        "ts_us_tz": pa.array(ts, pa.timestamp("us", "America/New_York")),
+        "decimal128": pa.array([dec, None], pa.decimal128(10, 2)),
+        "decimal128_38": pa.array([dec, None], pa.decimal128(38, 2)),
+    }
+    fallbacks = {
+        "list": (pa.table({"v": pa.array([[1], None], pa.list_(pa.int64()))}), {}),
+        "uint32": (pa.table({"v": pa.array([1, None], pa.uint32())}), {}),
+        "int96": (
+            pa.table({"v": pa.array(ts, pa.timestamp("us"))}),
+            {"use_deprecated_int96_timestamps": True},
+        ),
+        "case": (pa.table({"v": [1, 2], "V": [3, 4]}), {}),
+    }
+
+    def write(name, table, **kw):
+        one = str(tmp_path / f"{name}.parquet")
+        pq.write_table(table, one, **kw)
+        d = tmp_path / f"{name}_dir"
+        d.mkdir()
+        pq.write_table(table, str(d / "part-0.parquet"), **kw)
+        return one, str(d)
+
+    paths = {n: write(n, pa.table({"id": [1, 2], n: a})) for n, a in mapped.items()}
+    fb_paths = {n: write(f"fb_{n}", t, **kw) for n, (t, kw) in fallbacks.items()}
+
+    def same_as_inference(p):
+        return _outcome(lambda: dio.read_parquet(spark, p)) == _outcome(
+            lambda: spark.read.parquet(p)
+        )
+
+    def check():
+        for name, ps in paths.items():
+            for p in ps:
+                df, jobs = spark_jobs(spark, lambda: dio.read_parquet(spark, p))
+                assert df.schema == spark.read.parquet(p).schema, name
+                assert jobs == 0, name
+        for name, ps in fb_paths.items():
+            for p in ps:
+                assert dio._footer_schema(spark, p)[0] is None, name
+                assert same_as_inference(p), name
+
+    check()
+    one = paths["ts_ms"][0]
+    assert dio.read_parquet(spark, one).collect() == spark.read.parquet(one).collect()
+
+    # files of two schemas: inference merges them under mergeSchema
+    merged = tmp_path / "merged"
+    merged.mkdir()
+    pq.write_table(pa.table({"id": [1]}), str(merged / "part-0.parquet"))
+    pq.write_table(pa.table({"id": [2], "x": ["b"]}), str(merged / "part-1.parquet"))
+    flips = {
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+        "spark.sql.parquet.binaryAsString": "true",
+        "spark.sql.caseSensitive": "true",
+        "spark.sql.parquet.mergeSchema": "true",
+    }
+    for key, value in flips.items():
+        prev = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        try:
+            check()
+            if key == "spark.sql.parquet.mergeSchema":
+                assert same_as_inference(str(merged))
+        finally:
+            if prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
+    restored = dio.read_parquet(spark, paths["ts_us"][0]).schema["ts_us"].dataType
+    assert restored.typeName() == "timestamp_ntz"

@@ -8,12 +8,9 @@ import json
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from dish_data_pipeline_spark.io_bucketed import (
-    bucketed_join,
-    count_shuffles,
-    write_bucketed,
-)
+from dish_data_pipeline_spark.io import write_bucketed
 from dish_data_pipeline_spark.operators.skew import salted_agg, salted_join
+from dish_data_pipeline_spark.plans.plan_text import count_shuffles
 
 
 def _skewed(spark):
@@ -81,15 +78,20 @@ def test_salted_agg_matches_plain_agg(spark):
 def test_bucketed_join_has_no_shuffle(spark):
     a = spark.range(0, 1000).withColumn("va", F.col("id") * 2)
     b = spark.range(0, 1000).withColumn("vb", F.col("id") * 3)
-    write_bucketed(a, "bt_a", ["id"], buckets=4)
-    write_bucketed(b, "bt_b", ["id"], buckets=4)
-    joined = bucketed_join(spark, "bt_a", "bt_b", ["id"])
+    write_bucketed(a, "bt_a", 4, "id")
+    write_bucketed(b, "bt_b", 4, "id")
+    # the merge hint forces sort-merge: bucketing is moot under broadcast
+    joined = spark.table("bt_a").hint("merge").join(
+        spark.table("bt_b").hint("merge"), "id"
+    )
     assert joined.count() == 1000
-    assert count_shuffles(joined) == 0  # co-located: no Exchange
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert count_shuffles(plan) == 0  # co-located: no Exchange
 
     # control: same sort-merge join on raw (unbucketed) frames shuffles
     control = a.hint("merge").join(b.hint("merge"), "id")
-    assert count_shuffles(control) > 0
+    plan = control._jdf.queryExecution().executedPlan().toString()
+    assert count_shuffles(plan) > 0
 
 
 def test_stateful_user_stats_across_batches(spark, tmp_path):
