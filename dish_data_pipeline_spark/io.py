@@ -24,7 +24,7 @@ import uuid
 from collections.abc import Sequence
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -259,6 +259,80 @@ def read_parquet(
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def bare_parquet_files(df: DataFrame) -> list[str] | None:
+    """Local paths of the files ``df`` reads when ``df`` is a bare
+    Parquet scan, as :func:`read_parquet` returns for a table without
+    TIMESTAMP(NANOS) columns: no projection, filter or other operator
+    above the relation, and no bucketing. They come from the listing
+    Spark took when the plan was built, so this runs no job. None for
+    any other frame, or when a file is not local."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        rel.getClass().getSimpleName() != "HadoopFsRelation"
+        or rel.fileFormat().getClass().getSimpleName() != "ParquetFileFormat"
+        or rel.bucketSpec().isDefined()
+    ):
+        return None
+    paths = _input_paths(df)
+    return None if None in paths else paths
+
+
+def scan_partitions(df: DataFrame) -> int:
+    """The number of partitions ``df`` has, as
+    ``df.rdd.getNumPartitions()`` gives it. For a bare Parquet scan
+    (:func:`bare_parquet_files`) the count comes from the file sizes by
+    Spark's own split rule, so nothing is planned; any other frame
+    builds its RDD.
+
+    The rule (``FilePartition.maxSplitBytes`` and
+    ``getFilePartitions``): split size ``min(maxPartitionBytes,
+    max(openCostInBytes, total / minPartitionNum))``, where ``total``
+    counts each file's bytes plus ``openCostInBytes``; each file is cut
+    into splits of that size, and the splits, largest first, are packed
+    into a partition until the next would overflow it, each costing its
+    bytes plus ``openCostInBytes``. A ``maxPartitionNum`` below that
+    count repacks the same splits into partitions of their total cost
+    over ``maxPartitionNum``."""
+    files = bare_parquet_files(df)
+    if files is None:
+        return df.rdd.getNumPartitions()
+    session = df.sparkSession._jsparkSession
+    conf = session.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (
+        min_parts.get() if min_parts.isDefined()
+        else session.leafNodeDefaultParallelism()
+    )
+    sizes = [os.path.getsize(f) for f in files]
+    total = sum(n + open_cost for n in sizes)
+    split = min(
+        conf.filesMaxPartitionBytes(), max(open_cost, total // min_parts)
+    )
+    pieces = sorted(
+        (min(split, n - off) for n in sizes for off in range(0, n, split)),
+        reverse=True,
+    )
+
+    def pack(limit: int) -> int:
+        parts, size = 0, 0
+        for n in pieces:
+            if size and size + n > limit:
+                parts, size = parts + 1, 0
+            size += n + open_cost
+        return parts + (size > 0)
+
+    parts = pack(split)
+    max_parts = conf.filesMaxPartitionNum()
+    if max_parts.isDefined() and parts > max_parts.get():
+        cost = sum(n + open_cost for n in pieces)
+        parts = pack(-(-cost // max_parts.get()))
+    return parts
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -497,18 +571,27 @@ def _data_names(base: str) -> set[str]:
         }
 
 
+def _input_paths(df: DataFrame) -> list[str | None]:
+    """The files ``df``'s plan reads, from the listings Spark took when
+    the plan was built (``inputFiles``, no job): a local path each, or
+    None for a file that is not local."""
+    out = []
+    for uri in df.inputFiles():
+        u = urlparse(uri)
+        out.append(unquote(u.path) if u.scheme in ("", "file") else None)
+    return out
+
+
 def _names_read(df: DataFrame, base: str) -> set[str]:
     """Names of the files directly inside the local directory ``base``
-    that ``df``'s plan reads, from the listings Spark took when the
-    plan was built (``inputFiles``, no job)."""
+    that ``df``'s plan reads (:func:`_input_paths`)."""
     root = os.path.realpath(base)
     dirs: dict[str, bool] = {}
     out = set()
-    for uri in df.inputFiles():
-        u = urlparse(uri)
-        if u.scheme not in ("", "file"):
+    for path in _input_paths(df):
+        if path is None:
             continue
-        d, name = os.path.split(unquote(u.path))
+        d, name = os.path.split(path)
         if d not in dirs:
             dirs[d] = os.path.realpath(d) == root
         if dirs[d]:
@@ -516,8 +599,36 @@ def _names_read(df: DataFrame, base: str) -> set[str]:
     return out
 
 
+def clustered_writer(
+    df: DataFrame, keys: Sequence[str], rows: int
+) -> DataFrameWriter:
+    """A writer of ``df`` laid out for skipping by ``keys``: each task
+    sorts its rows by ``keys`` (``sortWithinPartitions``: no shuffle,
+    no job) and cuts them into files of at most ``ceil(rows /
+    defaultParallelism)`` rows (the ``maxRecordsPerFile`` option). So
+    each file's footer holds one narrow key range, and a later read of
+    about ``rows`` rows splits across every core. ``rows`` 0 leaves the
+    files uncapped."""
+    writer = df.sortWithinPartitions(*keys).write
+    if rows > 0:
+        par = df.sparkSession.sparkContext.defaultParallelism
+        writer = writer.option("maxRecordsPerFile", -(-rows // par))
+    return writer
+
+
+def _footer_rows(paths: Sequence[str]) -> int:
+    """Rows in the Parquet files ``paths``, from their footers (pyarrow,
+    no job)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p in paths)
+
+
 def atomic_overwrite(
-    df: DataFrame, path: str, carried: Sequence[str] = ()
+    df: DataFrame,
+    path: str,
+    carried: Sequence[str] = (),
+    cluster: Sequence[str] = (),
 ) -> None:
     """Overwrite ``path`` with ``df`` — plus the ``carried`` data
     files of the current table, kept byte for byte — safely even when
@@ -547,6 +658,14 @@ def atomic_overwrite(
     the target on one filesystem; when one fails, the carried files
     are read back and rewritten with ``df`` (a whole-table rewrite).
 
+    ``cluster`` names key columns to lay the written files out by
+    (:func:`clustered_writer`): sorted by those keys within each task,
+    and cut at ``ceil(rows / defaultParallelism)`` rows a file, where
+    ``rows`` is the footer row count of the target files ``df`` reads
+    and so rewrites (every file on a whole-table rewrite). A ``df``
+    that reads no target file, such as an insert-only MERGE, gets
+    sorted files with no cap.
+
     Crash-safety: every intermediate state is healable by
     ``recover_interrupted_swap`` and leaves either the old table or
     the complete new one; a crashed writer's stale lock is stolen by
@@ -558,7 +677,8 @@ def atomic_overwrite(
     """
     base = path.rstrip("/")
     with _swap_lock(base):
-        planned = _names_read(df, base) | set(carried)
+        rewritten = _names_read(df, base)
+        planned = rewritten | set(carried)
         if planned and os.path.isdir(base) and planned != _data_names(base):
             raise ConcurrentWriteError(
                 f"target {base!r} was swapped by another writer after "
@@ -578,7 +698,12 @@ def atomic_overwrite(
                 shutil.rmtree(tmp, ignore_errors=True)
                 kept = [os.path.join(base, name) for name in carried]
                 df = df.unionByName(read_parquet(df.sparkSession, base, kept))
-        df.write.mode(mode).parquet(tmp)
+                rewritten = planned
+        writer = df.write
+        if cluster:
+            rows = _footer_rows([os.path.join(base, n) for n in rewritten])
+            writer = clustered_writer(df, cluster, rows)
+        writer.mode(mode).parquet(tmp)
         old = tmp + ".old"
         if os.path.exists(path):
             os.rename(path, old)

@@ -86,6 +86,13 @@ class TableBackend(Protocol):
         ...
 
 
+#: Untouched target files a ``ParquetSwapBackend`` MERGE carries, per
+#: core of ``defaultParallelism``; the rest join the rewrite. It bounds
+#: the file count under insert-only feeds, and leaves room for the
+#: key-clustered files a rewrite leaves behind.
+CARRY_FILES_PER_CORE = 4
+
+
 class ParquetSwapBackend:
     """Join-based MERGE on plain Parquet, finished by a directory
     swap. Catalyst broadcasts the (small) staging side, so the target
@@ -96,7 +103,14 @@ class ParquetSwapBackend:
     carries the others into the new directory by hard link
     (:meth:`_split`): per-file key min/max from the Parquet footers,
     read by pyarrow with no Spark job, pruned by the manifest tier's rule
-    (:func:`_prune`)."""
+    (:func:`_prune`) against the staged key range, which also comes
+    from footers when the staging frame is a bare Parquet scan. Up to
+    ``CARRY_FILES_PER_CORE × defaultParallelism`` untouched files are
+    carried, the largest first. The rewritten rows are written sorted
+    by the merge keys, in files of at most
+    ``ceil(rows / defaultParallelism)`` rows (``io.clustered_writer``),
+    so the next batch reads them in parallel and skips the files
+    outside its key range."""
 
     name = "parquet"
 
@@ -130,7 +144,7 @@ class ParquetSwapBackend:
             new = upsert(dio.read_parquet(spark, path, rewrite), deduped, keys)
         else:
             new = deduped.select(*target.columns)
-        dio.atomic_overwrite(new, path, carried)
+        dio.atomic_overwrite(new, path, carried, cluster=keys)
 
     @staticmethod
     def _split(
@@ -147,11 +161,14 @@ class ParquetSwapBackend:
         No carried file holds a row whose keys can equal a staged
         row's: its footer min/max lies outside the staged range of a
         string or integer key, or every staged value of a key is null
-        (nulls never equi-join). The staged range costs one small
-        aggregate; the footers are read by pyarrow, with no job. At most
-        ``defaultParallelism`` files are carried, the largest, so the
-        file count stays bounded under insert-only feeds; the other
-        untouched files join the rewrite.
+        (nulls never equi-join). The footers are read by pyarrow, with
+        no job, and so is the staged range when ``staging`` is a bare
+        Parquet scan such as ``run_feed``'s staging re-read
+        (:func:`_staged_range`); any other frame costs one small
+        aggregate. At most ``CARRY_FILES_PER_CORE × defaultParallelism``
+        files are carried, the largest first, so the file count stays
+        bounded under insert-only feeds; the other untouched files join
+        the rewrite.
 
         Nothing is carried when the staged column types differ from
         the target's (a union would retype a column the carried files
@@ -175,10 +192,8 @@ class ParquetSwapBackend:
         ):
             return [], []
         names = sorted(dio._data_names(path))
-        row = staging.agg(
-            *[F.min(k) for k in cols], *[F.max(k) for k in cols]
-        ).first()
-        if any(v is None for v in row[: len(cols)]):
+        bounds = _staged_range(staging, cols)
+        if any(lo is None for lo, _ in bounds):
             affected = set()
         else:
             man = {
@@ -187,14 +202,14 @@ class ParquetSwapBackend:
                     n: _footer_min_max(os.path.join(path, n), cols) for n in names
                 },
             }
-            bounds = zip(row[: len(cols)], row[len(cols):])
             affected = set(_prune(man, dict(zip(cols, bounds))))
         untouched = sorted(
             (n for n in names if n not in affected),
             key=lambda n: os.path.getsize(os.path.join(path, n)),
             reverse=True,
         )
-        carried = untouched[: spark.sparkContext.defaultParallelism]
+        cap = CARRY_FILES_PER_CORE * spark.sparkContext.defaultParallelism
+        carried = untouched[:cap]
         if not carried:
             return [], []
         return carried, [os.path.join(path, n) for n in names if n not in carried]
@@ -203,6 +218,47 @@ class ParquetSwapBackend:
 class CommitConflict(RuntimeError):
     """A concurrent writer committed first and retries ran out (or
     the table already existed on ``create``)."""
+
+
+def _staged_range(
+    staging: DataFrame, cols: Sequence[str]
+) -> list[tuple]:
+    """``(min, max)`` of each of ``staging``'s columns ``cols``, both
+    None for a column that is empty or all null, as
+    ``staging.agg(min, max)`` gives them. When ``staging`` is a bare
+    Parquet scan (``io.bare_parquet_files``) they come from the files'
+    footers (:func:`_footer_range`), with no job; the aggregate runs
+    for any other frame, or when the footers cannot tell."""
+    files = dio.bare_parquet_files(staging)
+    bounds = None if files is None else _footer_range(files, cols)
+    if bounds is None:
+        row = staging.agg(
+            *[F.min(k) for k in cols], *[F.max(k) for k in cols]
+        ).first()
+        bounds = list(zip(row[: len(cols)], row[len(cols):]))
+    return bounds
+
+
+def _footer_range(files: Sequence[str], cols: Sequence[str]) -> list[tuple] | None:
+    """``(min, max)`` of each column ``cols`` over the Parquet
+    ``files``, folded from their footer statistics (files with no rows
+    add nothing, so no rows at all gives ``(None, None)``); None when
+    a file with rows has no min/max for a column (no statistics, or
+    only nulls), which leaves the range to the aggregate."""
+    import pyarrow.parquet as pq
+
+    lo: dict = {}
+    hi: dict = {}
+    for f in files:
+        stats = _footer_min_max(f, cols)
+        if len(stats) < len(cols):
+            if pq.read_metadata(f).num_rows:
+                return None
+            continue
+        for c, (a, b) in stats.items():
+            lo[c] = min(lo.get(c, a), a)
+            hi[c] = max(hi.get(c, b), b)
+    return [(lo.get(c), hi.get(c)) for c in cols]
 
 
 def _footer_min_max(

@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dish_data_pipeline_spark.io import read_table
+from dish_data_pipeline_spark.io import read_table, scan_partitions
 
 DEC = "decimal(38,6)"
 
@@ -73,9 +73,10 @@ def widen(df: DataFrame, spark: SparkSession) -> DataFrame:
     cores (measured 3-4× slower at sf0.1). Repartition ONLY when the
     scan under-provisions; at real scale inputs already carry >=
     cluster-width partitions and this is a no-op (no shuffle of a
-    100 TB corpus)."""
+    100 TB corpus). A bare file scan's partition count comes from its
+    file sizes (``io.scan_partitions``), so the build plans nothing."""
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if scan_partitions(df) < target:
         return df.repartition(target)
     return df
 

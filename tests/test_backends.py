@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import Row
 
 from dish_data_pipeline_spark.io_backends import (
+    CARRY_FILES_PER_CORE,
     ManifestParquetBackend,
     ParquetSwapBackend,
     get_backend,
@@ -434,25 +435,197 @@ def test_merge_planned_before_another_swap_raises(
     )
 
 
-def test_insert_only_merges_carry_at_most_parallelism_files(spark, tmp_path):
+@pytest.mark.parametrize("key_type", ["string", "bigint"])
+@pytest.mark.parametrize("case", ["values", "some_null", "empty", "all_null"])
+def test_staged_range_from_footers_equals_aggregate(
+    spark, tmp_path, key_type, case
+):
+    """The staged key range folded from a bare staging scan's footers
+    equals the min/max aggregate's and runs no job; all-null staging
+    leaves the range to the aggregate, and so does any other frame."""
+    from pyspark.sql import functions as F
+
+    from dish_data_pipeline_spark import io as dio
+    from dish_data_pipeline_spark.io_backends import _footer_range, _staged_range
+    from tests.test_job_budgets import spark_jobs
+
+    files_ids = {  # the keys of each staging file
+        "values": [[5, 17], [], [3, 11, 8]],
+        "some_null": [[5, None], [None, 17, 2]],
+        "empty": [[]],
+        "all_null": [[None], [None]],
+    }[case]
+    path = str(tmp_path / "staging")
+    for ids in files_ids:
+        keys = [
+            i if i is None or key_type == "bigint" else f"k{i:03d}" for i in ids
+        ]
+        df = spark.createDataFrame([(k, 1) for k in keys], f"k {key_type}, v int")
+        df.coalesce(1).write.mode("append").parquet(path)
+    staged = dio.read_parquet(spark, path)
+    want = staged.agg(F.min("k"), F.max("k")).first()
+
+    got, jobs = spark_jobs(spark, lambda: _staged_range(staged, ["k"]))
+    assert got == [tuple(want)]
+    files = dio.bare_parquet_files(staged)
+    assert files
+    if case == "all_null":
+        assert _footer_range(files, ["k"]) is None
+    else:
+        assert _footer_range(files, ["k"]) == [tuple(want)] and jobs == 0
+    assert dio.bare_parquet_files(staged.where("v = 1")) is None
+    assert dio.bare_parquet_files(staged.select("k")) is None
+
+
+def test_insert_only_merges_keep_the_file_count_bounded(spark, tmp_path):
     """Insert-only batches touch no file, so without a bound every
-    MERGE would add files; the largest ``defaultParallelism`` are
-    carried and the rest are rewritten with the batch."""
+    MERGE would add files; the largest ``CARRY_FILES_PER_CORE ×
+    defaultParallelism`` are carried and the rest are rewritten with
+    the batch. The rewrite's row cap cuts it into about
+    ``defaultParallelism`` files, plus one per writing task."""
     path = str(tmp_path / "tgt")
     be = ParquetSwapBackend()
     rows = _sorted_rows(_clustered(spark, path))
     par = spark.sparkContext.defaultParallelism
-    for i in range(3 * par):
+    cap = CARRY_FILES_PER_CORE * par
+    for i in range(cap + 4):
         batch = [Row(k=f"n{i:03d}{j}", v=i, ts=1) for j in range(3)]
         old = _inodes(path)
         be.merge_keep_latest(
             spark, path, spark.createDataFrame(batch), ["k"], "ts"
         )
         new = _inodes(path)
-        assert len({n for n, ino in new.items() if old.get(n) == ino}) <= par
-        assert len(new) <= 3 * par
+        assert len({n for n, ino in new.items() if old.get(n) == ino}) <= cap
+        assert len(new) <= cap + 2 * par
         rows = sorted(rows + [tuple(r) for r in batch], key=repr)
         assert _sorted_rows(be.read(spark, path)) == rows
+
+
+def _footer_rows_and_ranges(path):
+    """Data file name → (rows, [min k, max k]) from the footers."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    from dish_data_pipeline_spark.io_backends import _footer_min_max
+
+    out = {}
+    for name in _inodes(path):
+        f = _os.path.join(path, name)
+        out[name] = (pq.read_metadata(f).num_rows, _footer_min_max(f, ["k"])["k"])
+    return out
+
+
+def test_rewrite_is_key_clustered_in_footer_sized_files(spark, tmp_path):
+    """A MERGE that rewrites a one-file target writes files of at most
+    ``ceil(rows / defaultParallelism)`` rows, each task's files in
+    disjoint key ranges; a second MERGE inside one file's range
+    rewrites only the files whose range it overlaps."""
+    import math
+    import re
+
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    n = 4000
+    # one file, keys in hashed (unsorted) order
+    df = spark.range(n).selectExpr(
+        "format_string('k%04d', id) AS k", "id AS v", "0L AS ts"
+    ).orderBy(F.xxhash64("v")).coalesce(1)
+    be.create(df, path)
+    before = spark.createDataFrame(df.collect(), df.schema)
+    assert len(_inodes(path)) == 1
+    stg = spark.createDataFrame(
+        [Row(k=f"k{i:04d}", v=-i, ts=1) for i in range(0, n + 40, 97)],
+        "k string, v bigint, ts bigint",
+    )
+    be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+
+    want = upsert_keep_latest(before, stg, ["k"], "ts")
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(want)
+    files = _footer_rows_and_ranges(path)
+    limit = math.ceil(n / spark.sparkContext.defaultParallelism)
+    assert len(files) > 1
+    assert all(rows <= limit for rows, _ in files.values())
+    by_task: dict[str, list] = {}
+    for name, (_, rng) in files.items():
+        task, part = re.match(r"part-(\d+)-.*-c(\d+)", name).groups()
+        by_task.setdefault(task, []).append((int(part), rng))
+    for ranges in by_task.values():
+        ranges = [rng for _, rng in sorted(ranges)]
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
+
+    # keys inside the range of one file of the target's task: only the
+    # files overlapping it (the batch's own file among them) go
+    lo, hi = sorted(rng for _, rng in max(by_task.values(), key=len))[1]
+    inside = sorted(
+        r.k for r in be.read(spark, path).where(F.col("k").between(lo, hi))
+        .select("k").collect()
+    )[::50]
+    stg2 = spark.createDataFrame(
+        [Row(k=k, v=7, ts=2) for k in inside], "k string, v bigint, ts bigint"
+    )
+    old = _inodes(path)
+    be.merge_keep_latest(spark, path, stg2, ["k"], "ts")
+    new = _inodes(path)
+    overlapping = {
+        name for name, (_, (a, b)) in files.items()
+        if not (b < min(inside) or a > max(inside))
+    }
+    assert set(old) - overlapping  # some file is skipped
+    assert {n for n, ino in new.items() if old.get(n) == ino} == (
+        set(old) - overlapping
+    )
+    assert _sorted_rows(be.read(spark, path)) == _sorted_rows(
+        upsert_keep_latest(want, stg2, ["k"], "ts")
+    )
+
+
+def test_update_heavy_merges_carry_every_untouched_file(spark, tmp_path):
+    """Feed-shaped MERGEs (updates of the newest tenth of the keys plus
+    as many inserts beyond them) carry every file outside the staged
+    key range, and the file count stops growing."""
+    import random
+
+    path = str(tmp_path / "tgt")
+    be = ParquetSwapBackend()
+    n, batch = 8000, 20
+    be.create(
+        spark.range(0, n, 1, 4).selectExpr(
+            "format_string('k%05d', id) AS k", "id AS v", "0L AS ts"
+        ),
+        path,
+    )
+    rows = {f"k{i:05d}": (i, 0) for i in range(n)}
+    rng = random.Random(7)
+    nxt, counts = n, []
+    for op in range(1, 9):
+        keys = rng.sample(range(n * 9 // 10, n), batch)
+        keys += range(nxt, nxt + batch)
+        nxt += batch
+        staged = {f"k{i:05d}": (-i, op) for i in keys}
+        stg = spark.createDataFrame(
+            [Row(k=k, v=v, ts=ts) for k, (v, ts) in staged.items()],
+            "k string, v bigint, ts bigint",
+        )
+        lo, hi = min(staged), max(staged)
+        old = _footer_rows_and_ranges(path)
+        inodes = _inodes(path)
+        be.merge_keep_latest(spark, path, stg, ["k"], "ts")
+        untouched = {
+            name for name, (_, (a, b)) in old.items() if b < lo or a > hi
+        }
+        new = _inodes(path)
+        assert {name for name in untouched if new.get(name) == inodes[name]} == (
+            untouched
+        )
+        rows.update(staged)
+        counts.append(len(new))
+    assert sorted((k, v, ts) for k, (v, ts) in rows.items()) == _sorted_rows(
+        be.read(spark, path)
+    )
+    assert max(counts[4:]) <= max(counts[:4]), counts
 
 
 # --- ManifestParquetBackend (the executable transactional tier) ----

@@ -50,6 +50,37 @@ def test_atomic_overwrite_read_modify_write(spark, tmp_path):
     assert [d for d in os.listdir(parent) if d.startswith(".tmp-")] == []
 
 
+@pytest.mark.parametrize(
+    "confs",
+    [
+        {},
+        {"maxPartitionBytes": "64k"},
+        {"maxPartitionBytes": "64k", "maxPartitionNum": "3"},
+    ],
+    ids=["whole", "split", "split_capped"],
+)
+@pytest.mark.parametrize("n_files", [1, 3, 40])
+def test_scan_partitions_matches_the_rdd(spark, tmp_path, n_files, confs):
+    """A bare scan's partition count from its file sizes equals the
+    planned RDD's, for one, few and many files: whole files, files cut
+    into splits, and splits repacked under ``maxPartitionNum``; any
+    other frame counts its RDD's."""
+    path = str(tmp_path / "t")
+    spark.range(0, 60_000, 1, n_files).selectExpr(
+        "id", "repeat('x', CAST(id % 37 AS int)) AS s"
+    ).write.parquet(path)
+    for key, value in confs.items():
+        spark.conf.set(f"spark.sql.files.{key}", value)
+    try:
+        df = dio.read_parquet(spark, path)
+        assert len(dio.bare_parquet_files(df)) == n_files
+        assert dio.scan_partitions(df) == df.rdd.getNumPartitions()
+    finally:
+        for key in confs:
+            spark.conf.unset(f"spark.sql.files.{key}")
+    assert dio.scan_partitions(df.repartition(7)) == 7
+
+
 def test_raw_zone_partitioned_write(spark, tmp_path):
     from dish_data_pipeline_spark.operators.enrich import with_date_partitions
 

@@ -25,10 +25,11 @@ from tests.test_backends import _bloom_table
 from tests.test_pipeline_ga import FEED, sessions_server
 
 #: jobs of one run_feed MERGE into an existing multi-file target: JSON
-#: inference 1, DQ collect 5, staging write 1, MERGE key-range
-#: aggregate 2, MERGE write 4, audit append 1 (the staging re-read and
-#: the target open take their schemas from Parquet footers: 0 jobs)
-RUN_FEED_MERGE_JOBS = 14
+#: inference 1, DQ collect 5, staging write 1, MERGE write 4, audit
+#: append 1 (the staging re-read and the target open take their
+#: schemas, and the MERGE its staged key range, from Parquet footers:
+#: 0 jobs)
+RUN_FEED_MERGE_JOBS = 12
 
 #: jobs of one bloom-enabled manifest create (4 files, one bloom
 #: column): data write 3 (the range bounds' sample, then one job per
